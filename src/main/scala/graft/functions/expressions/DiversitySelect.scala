@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * scale the plain prune closes clone clusters into ~2,000
   * near-disconnected cliques and the serving walk collapses to
   * recall 0.39 with 58/100 queries returning NOTHING (SCALING_SF10.md
-  * §7.5); the decisive experiment (§7.6, `tools.DiversePruneRecall`)
-  * measured this selection at 0.999 vs 0.510 for plain top-m from the
-  * SAME candidates, with zero trapped queries.
+  * §7.5); the decisive experiment (SCALING_SF10.md §7.6) measured
+  * this selection at 0.999 vs 0.510 for plain top-m from the SAME
+  * candidates, with zero trapped queries.
   *
   * Semantics, given candidates sorted ascending by (dist, dst):
   *   - greedy scan: keep candidate c (at distance d(src,c)) iff fewer

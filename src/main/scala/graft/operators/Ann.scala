@@ -374,9 +374,9 @@ object Ann {
     * (`src/hnsw.zig:143-170`), just wider — and the DECLARED neighbor
     * lists are [[graft.functions.expressions.DiversitySelect]]'s
     * diversity-selected m of those candidates ([[diversityView]]).
-    * 4 is the measured shape from `tools.DiversePruneRecall`
-    * (SCALING_SF10.md §7.6): top-4m candidates recover recall 0.999 on
-    * the corpora whose plain top-m graph clique-traps to 0.39–0.51,
+    * 4 is the measured shape recorded in SCALING_SF10.md §7.6:
+    * top-4m candidates recover recall 0.999 on the corpora whose
+    * plain top-m graph clique-traps to 0.39–0.51,
     * while keeping the NND refinement itself at m (running the rounds
     * at 4m is a 16× candidate blowup the experiment measured into
     * driver heartbeat stalls). Keeping the STATE plain-wide (not
@@ -812,18 +812,6 @@ object Ann {
     * irrecoverably — via the checkpointed RDD's storage level; a dead
     * entry is rebuilt, never served. Bounded at [[MaxExactPairsEntries]]
     * (each entry is ≤ ~2048·m rows — sample-sized, not corpus-sized). */
-  /** Serializes every set/restore scope of the session-global
-    * ObjectHashAggregate fallback-threshold conf (here, the approx
-    * build, and Similarity's probe assignment): two threads sharing
-    * one SparkSession could otherwise interleave captures and restores
-    * so the LAST restore resurrects the other scope's raise — leaking
-    * a 4M threshold to later KB-buffer aggregates (an OOM hazard) or
-    * demoting a build mid-flight to the sort fallback. synchronized is
-    * reentrant, so the build's inner measurement scopes nest freely;
-    * concurrent builds in one JVM serialize, which is the gate tools'
-    * (sequential) execution model anyway. */
-  private[graft] val fallbackThresholdScope = new Object
-
   private val exactPairsCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] val MaxExactPairsEntries = 8
@@ -881,12 +869,7 @@ object Ann {
   private[graft] def sampledExactPairsAt(e: DataFrame, stride: Long,
       m: Int): DataFrame = {
     val s = e.sparkSession
-    fallbackThresholdScope.synchronized {
-    val thresholdKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prev = s.conf.getOption(thresholdKey)
-    s.conf.set(thresholdKey, "65536")
-    try {
+    SessionConf.scoped(s, SessionConf.FallbackThreshold -> "65536") {
       val sample = e.filter(col("vec_id") % stride === 0)
         .select(col("vec_id").as("qsrc"), col("embedding").as("sv"))
       val top = SqlBridge.column(TopMEdges(
@@ -902,10 +885,6 @@ object Ann {
         .select(col("src"), explode(col("top")).as("te"))
         .select(col("src"), col("te.dst").as("dst"), col("te.dist").as("dist"))
         .localCheckpoint(true)
-    } finally prev match {
-      case Some(v) => s.conf.set(thresholdKey, v)
-      case None    => s.conf.unset(thresholdKey)
-    }
     }
   }
 
@@ -1310,61 +1289,49 @@ object Ann {
     // bytecode), so a lazily-returned plan cannot scope it: the build
     // MATERIALIZES EAGERLY here (one localCheckpoint of the
     // output-sized edge table — the NND rounds already checkpoint
-    // tables of the same size) and the previous threshold is restored
-    // in the finally, so later aggregates in the same session (e.g. a
-    // sketch-typed UDAF whose per-key buffers are KB, where 4M keys
-    // would be an OOM) see their own conf, never this build's raise.
+    // tables of the same size) inside [[approxBuildConf]]'s scope,
+    // which also turns AQE off; the scope restores both keys, so later
+    // aggregates in the same session (e.g. a sketch-typed UDAF whose
+    // per-key buffers are KB, where 4M keys would be an OOM) see their
+    // own conf, never this build's raise.
     // The eager boundary is also what makes the intermediate state
     // freeable: the bucket-stage cache and the per-round NND
     // checkpoints unpersist on the way out, so repeated builds in one
     // session leave only their result checkpoint (pinned in AnnSpec).
-    fallbackThresholdScope.synchronized {
-    val thresholdKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevThreshold = s.conf.getOption(thresholdKey)
-    s.conf.set(thresholdKey, topMFallbackThreshold(
-      Runtime.getRuntime.maxMemory,
-      s.sparkContext.defaultParallelism).toString)
-    // AQE stays ON through the build (r15). r14 had scoped it off
-    // wholesale to dodge a SortMergeJoin crash at the 10× sf1 point —
-    // the finger-seed join's two sides finalized under AQE with
-    // DIFFERENT partition counts and the join died constructing its
-    // output PartitioningCollection ("requires all of its
-    // partitionings have the same numPartitions"). The root cause is
-    // fixed at the join itself: both sides are now explicitly
-    // repartitioned to the SAME data-derived shard count (see the
-    // finger-seed block in [[hnswEdgesApproxPlan]]), which AQE leaves
-    // alone (user-specified partition counts are never coalesced), so
-    // the mismatch cannot arise and the rest of the build keeps AQE's
-    // small-partition coalescing and skew handling — the r14 scoping
-    // had also removed ~20 stages' worth of adaptive right-sizing at
-    // the bench SFs (8-core beat 32-core on this query, the VERDICT
-    // r14 scaling block).
-    // the plan call itself runs eager jobs (measuredKeyDims,
+    // The plan call itself runs eager jobs (measuredKeyDims,
     // sampledExactPairs, measuredCapture, escalated NND rounds), so it
-    // sits INSIDE the try: a failure mid-build must still restore the
+    // sits INSIDE the scope: a failure mid-build must still restore the
     // conf and free whatever state was registered up to the throw —
     // the plan registers each cache/checkpoint into `track` the moment
     // it creates it, not on return.
-    val track = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    try {
-      val wide =
-        hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap, refine, track,
-          scoredMassCeiling = scoredMassCeiling)
-      // the view (diversity selection or plain slice) pipelines
-      // straight onto the wide final TopMEdges stage (same-keys
-      // window / collect_list — no extra exchange), so ONE eager
-      // checkpoint materializes build + view inside the threshold scope
-      approxFinalRank(view(wide).localCheckpoint(true))
-    } finally {
-      prevThreshold match {
-        case Some(v) => s.conf.set(thresholdKey, v)
-        case None    => s.conf.unset(thresholdKey)
-      }
-      track.foreach(freeBuildState)
-    }
+    SessionConf.scoped(s, approxBuildConf(s): _*) {
+      val track = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      try {
+        val wide =
+          hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap, refine, track,
+            scoredMassCeiling = scoredMassCeiling)
+        // the view (diversity selection or plain slice) pipelines
+        // straight onto the wide final TopMEdges stage (same-keys
+        // window / collect_list — no extra exchange), so ONE eager
+        // checkpoint materializes build + view inside the conf scope
+        approxFinalRank(view(wide).localCheckpoint(true))
+      } finally track.foreach(freeBuildState)
     }
   }
+
+  /** The session conf both approximate-build entry points run under:
+    * the memory-derived TopMEdges hash budget
+    * ([[topMFallbackThreshold]]), and AQE off. With AQE off every
+    * shuffled join in the build plans both sides with one partition
+    * count, so no join under a union can meet sides that AQE finalized
+    * at different counts (Spark fails those with "PartitioningCollection
+    * requires all of its partitionings have the same numPartitions").
+    * ParallelismSweepSpec builds at 1, 3 and 8 cores. */
+  private def approxBuildConf(s: SparkSession): Seq[(String, String)] = Seq(
+    SessionConf.FallbackThreshold -> topMFallbackThreshold(
+      Runtime.getRuntime.maxMemory,
+      s.sparkContext.defaultParallelism).toString,
+    SessionConf.Adaptive -> "false")
 
   /** Final presentation of the refined edge table: per-(level, src)
     * rank in (dist, dst) order — runs AFTER the eager build boundary,
@@ -1376,18 +1343,21 @@ object Ann {
       .orderBy(col("level"), col("src"), col("rnk"))
 
   /** Audit surface for PlanSpec: the identical build lineage the eager
-    * wrapper executes, returned LAZILY — no conf mutation, no
-    * checkpoint — so the plan audit sees every stage a regression
-    * could land in. */
+    * wrapper executes, returned LAZILY — no result checkpoint — so the
+    * plan audit sees every stage a regression could land in. The plan
+    * call still runs the build's eager measurement jobs, so it runs
+    * under the same [[approxBuildConf]] scope as the eager wrapper. */
   private[graft] def hnswEdgesApproxForAudit(s: SparkSession, d: String,
       m: Int = 16, nProj: Int = DefaultNProj, w: Double = DefaultKeyW,
       probe: Int = DefaultProbe,
       cap: Int = DefaultCap, refine: Int = 2): DataFrame =
-    approxFinalRank(diversityView(s,
-      d,
-      hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap, refine,
-        scala.collection.mutable.ListBuffer.empty[DataFrame], audit = true),
-      m))
+    SessionConf.scoped(s, approxBuildConf(s): _*) {
+      approxFinalRank(diversityView(s,
+        d,
+        hnswEdgesApproxPlan(s, d, m, nProj, w, probe, cap, refine,
+          scala.collection.mutable.ListBuffer.empty[DataFrame], audit = true),
+        m))
+    }
 
   /** Frees one piece of build state: a cached DataFrame, or the
     * block-manager blocks behind a localCheckpoint (reached through
@@ -1546,19 +1516,12 @@ object Ann {
     // the fold visits the same index order, so the (dist, id) heaps
     // and the DISTINCT-formulated oracle are untouched.
     //
-    // BOTH join sides are explicitly repartitioned on the join key to
-    // the SAME pinned, fold-count-derived shard count ([[foldShards]]):
-    // (1) under AQE the two sides of a shuffled join can finalize with
-    // different partition counts, and any SMJ under a Union crashes
-    // constructing its PartitioningCollection when the union's
-    // doExecute asks for output partitioning (the r14 sf1 crash — the
-    // candidate joins feed exactly such unions); a user-specified
-    // count is never AQE-coalesced, so the sides stay equal by
-    // construction. (2) The scoring stage is compute-bound on slim
-    // rows, so AQE's byte-based coalescing would serialize it — the
-    // pinned count sizes it by estimated distance folds instead. The
-    // exchange count is unchanged (the join required these shuffles
-    // anyway); only their partition count is pinned.
+    // Both join sides are repartitioned on the join key to one
+    // fold-count-derived shard count ([[foldShards]]): the scoring
+    // stage is compute-bound on slim rows, so it is sized by estimated
+    // distance folds, not by bytes or the session's shuffle default.
+    // The exchange count is unchanged (the join required these
+    // shuffles anyway); only their partition count is pinned.
     val candShards = foldShards(s, cnt.toDouble * nProj *
       math.pow(2 * probe + 1, keyDims) * cap / 2)
     val keyJoinCols = ("proj_id" +: bucketCols).map(col)
@@ -1622,16 +1585,11 @@ object Ann {
       .select(col("vec_id"), (col("boff") + col("ir")).as("r"))
     // finger pairs move (id, level, rank) only — n·fingers slim rows
     // through the rank equi-join, payloads re-attached map-side.
-    // BOTH sides of the rank equi-join are explicitly repartitioned to
-    // the SAME data-derived shard count: under AQE the two sides of
-    // this join could finalize with different partition counts and the
-    // SortMergeJoin crashed constructing its PartitioningCollection
-    // (r14's sf1 "requires all of its partitionings have the same
-    // numPartitions" — r14 scoped AQE off wholesale to dodge it). A
-    // user-specified partition count is never AQE-coalesced, so the
-    // sides stay aligned by construction, the join plans with zero
-    // extra exchanges (each side already hash-partitioned on its key),
-    // and AQE stays ON for the rest of the build.
+    // Both sides of the finger-pair join are repartitioned to one
+    // volume-derived shard count ([[buildShards]]), which sizes the
+    // stage that joins, re-attaches and scores the n·fingers pairs;
+    // the join then plans with no extra exchange (each side is already
+    // hash-partitioned on its key).
     val fingerShards = buildShards(s, cnt * (fingers + 1L), 48L)
     val er = e.select(col("vec_id"), col("level")).join(ranks, "vec_id")
     val fj = er.select(col("vec_id"), col("level"), col("r"),
@@ -1755,12 +1713,10 @@ object Ann {
       // shuffle sides, ~76 GB at the 2M-vector fixture. The n·(2m)²
       // candidate stream never shuffles at all: self-join → attach ×2
       // → score → partial TopMEdges heap is one map stage.
-      // the self-join's sides are ONE explicitly repartitioned frame
-      // with a pinned, fold-count-derived shard count — same two
-      // reasons as the bucket candidate join above: equal-count sides
-      // under AQE (this SMJ feeds topM's union — the exact site of the
-      // r14 sf1 PartitioningCollection crash), and fold-derived (not
-      // byte-derived) parallelism for the n·(2m)² scoring stage
+      // the self-join's sides are ONE repartitioned frame with a
+      // fold-count-derived shard count ([[foldShards]]), as for the
+      // bucket candidate join above: the n·(2m)² scoring stage is
+      // compute-bound, so it is sized by folds, not bytes
       val nbShards = foldShards(s, 2.0 * cnt * (2 * m) * (2 * m))
       val nb = baseM.select(col("level"), col("src"), col("dst"))
         .unionByName(revCapped.select(col("level"), col("src"), col("dst")))

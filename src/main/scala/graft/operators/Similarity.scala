@@ -548,12 +548,7 @@ object Similarity {
     // TopMEdges heaps are p entries (~32 B) but the default 128-group
     // fallback would sort-demote every corpus-sized per-vector argmin;
     // scoped raise, restored after the eager materialization below.
-    Ann.fallbackThresholdScope.synchronized {
-    val thresholdKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prev = s.conf.getOption(thresholdKey)
-    s.conf.set(thresholdKey, "65536")
-    try {
+    SessionConf.scoped(s, SessionConf.FallbackThreshold -> "65536") {
       // per-level checkpoints at L > 2 only, freed after the final
       // assignment materializes — the semanticCells treatment; freed
       // in a finally so a failing final checkpoint can't leak them
@@ -561,10 +556,6 @@ object Similarity {
       try semanticCellsProbePlan(s, d, cellSize, p, bases,
         checkpoint = true).localCheckpoint(true)
       finally bases.foreach(Ann.freeBuildState)
-    } finally prev match {
-      case Some(v) => s.conf.set(thresholdKey, v)
-      case None    => s.conf.unset(thresholdKey)
-    }
     }
   }
 

@@ -305,7 +305,13 @@ object StreamingOps {
     * it holds, so a session-parallelism shard count (32 here) taxes a
     * small feed ~4× the work the query itself does; the feed-derived
     * count keeps the cap authoritative at cluster scale (guide §2:
-    * scale-adaptive partitioning, not a local-mode constant). */
+    * scale-adaptive partitioning, not a local-mode constant).
+    * The one conf scope NOT taken through
+    * [[graft.operators.SessionConf.scoped]]: `body` blocks in
+    * `awaitTermination` while micro-batch threads run engine code
+    * (`IndexMaintainer` → `hnswFoldBatch`), so holding that scope's
+    * lock across the wait would deadlock as soon as such code entered
+    * a scope itself. */
   private def withFeedShards[T](s: SparkSession, d: String,
                                 table: String)(body: => T): T = {
     val shuffleKey = "spark.sql.shuffle.partitions"

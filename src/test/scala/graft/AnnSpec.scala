@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Ann, HnswLevel, Knn}
+import graft.operators.{Ann, HnswLevel, Knn, SessionConf}
 
 /** Recall and structure tests for the approximate operators — the
   * engine's analogue of the reference's "Large Dataset" behavioral
@@ -774,17 +774,21 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("hnsw_edges_approx: conf restored and intermediate state freed after the eager build") {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    // pre-set a sentinel so the restore path through an existing value
-    // is the one exercised (the unset path is the same finally block)
+    val key = SessionConf.FallbackThreshold
+    val aqe = SessionConf.Adaptive
+    // a sentinel exercises the restore of a key that had a value; AQE
+    // starts UNSET, so the build's AQE-off must be unset again after
     val sentinel = "4096"
     spark.conf.set(key, sentinel)
+    spark.conf.unset(aqe)
     try {
       val before = spark.sparkContext.getPersistentRDDs.size
       val r1 = Ann.hnswEdgesApprox(spark, d)
       assert(r1.count() > 0)
       assert(spark.conf.get(key) == sentinel,
         "fallback-threshold raise leaked out of the build")
+      assert(!spark.conf.getAll.contains(aqe),
+        "the build's AQE-off leaked out as a set key")
       val after1 = spark.sparkContext.getPersistentRDDs.size
       // each build may leave exactly ONE persisted artifact — its
       // result checkpoint (caller-owned); the bucket-stage cache and
@@ -797,7 +801,28 @@ class AnnSpec extends AnyFunSuite {
       val after2 = spark.sparkContext.getPersistentRDDs.size
       assert(after2 - after1 <= 1,
         s"repeated builds accumulate storage: $after1 -> $after2 persistent RDDs")
-    } finally spark.conf.unset(key)
+      // the audit entry point runs the same eager measurement jobs
+      // under the same scope, and restores a key that had a value
+      spark.conf.set(aqe, "true")
+      Ann.hnswEdgesApproxForAudit(spark, d, refine = 0)
+      assert(spark.conf.get(aqe) == "true")
+      assert(spark.conf.get(key) == sentinel)
+      // a scope whose body throws still restores every key, set or unset
+      spark.conf.unset(aqe)
+      val boom = intercept[IllegalStateException] {
+        SessionConf.scoped(spark, key -> "65536", aqe -> "false") {
+          assert(spark.conf.get(key) == "65536")
+          assert(spark.conf.get(aqe) == "false")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(boom.getMessage == "body failed")
+      assert(spark.conf.get(key) == sentinel)
+      assert(!spark.conf.getAll.contains(aqe))
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.unset(aqe)
+    }
   }
 
   test("ann_ivfpq: composed index keeps useful recall; self reachable through own cell") {
