@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ONLY the reference-comparable baseline workload
   * (BASELINE.md scale) with explicit SIMD-kernel status, to separate
   * kernel regressions from host noise without paying the full bench.
@@ -12,14 +10,8 @@ object BaselineOnly {
     val reps = if (args.nonEmpty) args(0).toInt else 3
     val dim = if (args.length > 1) args(1).toInt else BaselineWorkload.DIM
     val k = if (args.length > 2) args(2).toInt else BaselineWorkload.K
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-baseline-only")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus(32)
+    val spark = LocalSession("graft-baseline-only", cpus)
     println(s"[baseline] simdEnabled=${VectorKernel.simdEnabled} cpus=$cpus dim=$dim k=$k")
     BaselineWorkload.run(spark, dim = dim, k = k) // warm; pays JIT, discarded
     (1 to reps).foreach { i =>

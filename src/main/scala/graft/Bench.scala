@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: ONE JSON line on stdout with
   * per-query wall seconds on `SPARK_GRAFT_SF_DIR` (default sf0.1).
   *
@@ -27,16 +25,7 @@ object Bench {
     // the JVM to ROOT before any formatting happens
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench", LocalSession.cpus(32))
 
     // Warm-up at the smallest SF, not timed: each query's generated
     // whole-stage-codegen classes are identical across SF dirs (the

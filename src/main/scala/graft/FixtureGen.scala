@@ -190,14 +190,7 @@ object FixtureGen {
       case _ => ()
     }
     val spread = args.contains("--spread")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-fixture-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-fixture-gen", LocalSession.cpus(32))
 
     tables(spark, replicas, spread).toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }

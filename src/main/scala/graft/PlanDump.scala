@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` of headline queries to
   * PLANS.md — the checked-in evidence that the plans have the shape
   * the docstrings claim (pushdown, broadcasts, no stray shuffles,
@@ -47,14 +45,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-plandump", 8, "ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.PlanDump` at $sfDir. Regenerate: " +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` of NAMED queries to one file
   * each — the before/after plan evidence the optimization rounds
   * commit under `plans/<round>/<query>_{before,after}.txt`.
@@ -13,14 +11,7 @@ object PlanFiles {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-planfiles")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-planfiles", 8, "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

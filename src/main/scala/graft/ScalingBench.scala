@@ -26,16 +26,7 @@ object ScalingBench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
 
     val rows = cores.map { c =>
-      val spark = SparkSession.builder()
-        .master(s"local[$c]")
-        .appName(s"graft-scaling-$c")
-        // partitions = cores: each worker thread owns one corpus block,
-        // the same 1-block-per-core layout a cluster executor would run
-        .config("spark.sql.shuffle.partitions", c.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = LocalSession(s"graft-scaling-$c", c)
       BaselineWorkload.run(spark) // warm: pays JIT once per session
       val (b, s) = Seq.fill(reps)(BaselineWorkload.run(spark))
         .minBy(r => r._1 + r._2)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named queries in isolation.
   * Usage: runMain graft.TimeOne <sfDir> <query>[,query...] [reps]
   * Warms each query at sf0.001 first (JIT), then times `reps` runs.
@@ -11,16 +9,7 @@ object TimeOne {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-timeone")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-timeone", LocalSession.cpus(32))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       fn(spark, "/root/testdata/sf0.001").count() // warm

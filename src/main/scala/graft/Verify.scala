@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verify", LocalSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // No warm-up pass. Bench warms every query at sf0.001 because it
     // measures steady-state seconds; this main measures nothing — each
@@ -98,8 +90,8 @@ object Verify {
             s"[verify] dedup_stats evidence: derived in-session " +
               s"(declared query never reads cross-session storage); " +
               s"choice=${graft.operators.Similarity.lastDedupChoice}; " +
-              s"storePath=$p storeExists=" +
-              new java.io.File(s"$p/_SUCCESS").exists())
+              s"store=$p storeExists=" +
+              graft.operators.BuildStore.published(p))
         } catch { case e: Throwable =>
           System.err.println(
             s"[verify] dedup_stats evidence unavailable: ${e.getMessage}")

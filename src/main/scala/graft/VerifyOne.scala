@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: the [[Verify]] dump restricted to named queries — fast
@@ -11,13 +10,7 @@ object VerifyOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesArg) = args.take(3)
     val names = namesArg.split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verifyone", 8)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir)

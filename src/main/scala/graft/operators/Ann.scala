@@ -825,8 +825,8 @@ object Ann {
 
   private[graft] def sampledExactPairsCached(s: SparkSession, d: String,
       e: DataFrame, stride: Long, m: Int): DataFrame = {
-    val key =
-      s"${System.identityHashCode(s)}|${storePath(d, "exactpairs")}|$stride|$m"
+    val key = s"${System.identityHashCode(s)}|" +
+      BuildStore.key(d, "exactpairs", s"s$stride", s"m$m")
     val hit = exactPairsCache.get(key)
     if (hit != null && checkpointLive(hit)) hit
     else {
@@ -1806,145 +1806,77 @@ object Ann {
     }
   }
 
-  /** Deterministic on-storage location of a persisted build artifact
-    * for fixture dir `d` — the ONE path helper every persisted
-    * variant (HNSW index layouts, the trained k-means codebook) keys
-    * through. The key folds in a CONTENT fingerprint of the fixture's
-    * embeddings parquet (size + mtime, file or part-file dir) on top
-    * of the dir path: a fixture regenerated in place with different
-    * data lands on a fresh store location instead of silently serving
-    * a stale artifact. Driver-side file metadata only — no Spark job. */
-  private[operators] def storePath(d: String, tag: String): String = {
-    val f = new java.io.File(s"$d/embeddings.parquet")
-    val content =
-      if (f.isDirectory)
-        // listFiles() is NULL (not empty) on an IO/permission failure
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.isFile)
-          .map(c => c.length + c.lastModified).sum.toString
-      else if (f.isFile) s"${f.length}-${f.lastModified}"
-      else "absent"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$content".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_base_index/v2-$key-$tag"
-  }
-  private def indexPath(d: String, m: Int, variant: String): String =
-    storePath(d, s"m$m-$variant")
-  private def baseIndexPath(d: String, m: Int): String =
-    indexPath(d, m, s"base-w$DiversityWiden")
+  /** [[BuildStore]] tags of the vector-resident index layouts, which
+    * also key [[upperGraph]]'s memo. */
+  private val FullVecTag = "fullv"
+  private val FullVecApproxTag = "fullv-approx"
 
   /** Setup step of the incremental-insert lifecycle: build the base
-    * (90%) index ONCE per fixture dir and persist it as a parquet edge
+    * (90%) index ONCE per fixture and persist it as a parquet edge
     * table — the stored structure an insert batch amends, exactly like
     * a production index living on shared storage. Subsequent calls
     * (and every rerun of [[hnswInsertDelta]]) just read it back, so
     * the measured cost of the incremental path is the O(Δ·n) delta
-    * math, not a rebuild. DOUBLE distances round-trip parquet
-    * bitwise, so reading back is hash-identical to rebuilding. */
-  def ensureBaseIndex(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    // the stored maintenance state is WIDE (top-DiversityWiden·m plain
-    // — see [[DiversityWiden]]); the w4 tag keeps any pre-diversity
-    // m-wide artifact from silently serving this path
-    val path = baseIndexPath(d, m)
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
+    * math, not a rebuild. The stored maintenance state is WIDE
+    * (top-DiversityWiden·m plain — see [[DiversityWiden]]). */
+  def ensureBaseIndex(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, "base", s"m$m") {
       val base = levelNodes(s, d).filter(n => n._1 % 10 != 0)
       val wm = DiversityWiden * m
       pruneLevelEdges(levelEdgePartials(s, base, base, wm, MaxLevel, EdgeBlocks), wm)
         .select(col("level"), col("src"), col("dst"), col("dist"))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
-  }
 
   /** Setup step of the serving lifecycle: build the FULL all-level
-    * edge table ONCE per fixture dir ([[hnswEdges]]' exact output,
-    * minus the presentation `rnk`) and persist it as parquet — the
-    * stored index a search query serves from. The reference separates
-    * these phases the same way: `insert` builds the structure once,
-    * `search` runs against the built structure (`src/hnsw.zig:73,194`)
-    * — a search never pays a rebuild. DOUBLE distances round-trip
-    * parquet bitwise (proven by the [[hnswInsertDelta]] hash gate), so
-    * serving from storage is hash-identical to searching a freshly
-    * built graph. */
-  def ensureFullIndex(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    // dp = diversity-pruned: the SERVING graph is the declared
-    // [[hnswEdges]] adjacency; maintenance composes on the wide plain
-    // state ([[ensureFullIndexWide]]) this view derives from
-    val path = indexPath(d, m, "full-dp")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      diversityView(s, d, ensureFullIndexWide(s, d, m), m)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+    * edge table ONCE per fixture ([[hnswEdges]]' exact output, minus
+    * the presentation `rnk`) and persist it as parquet — the stored
+    * index a search query serves from. The reference separates these
+    * phases the same way: `insert` builds the structure once, `search`
+    * runs against the built structure (`src/hnsw.zig:73,194`) — a
+    * search never pays a rebuild. The SERVING graph is the declared
+    * diversity-pruned adjacency; maintenance composes on the wide plain
+    * state ([[ensureFullIndexWide]]) this view derives from. */
+  def ensureFullIndex(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, "full", s"m$m")(
+      diversityView(s, d, ensureFullIndexWide(s, d, m), m))
 
   /** The persisted WIDE plain state of the full exact index — the form
     * the incremental delete path repairs against (its "affected srcs"
     * are srcs whose WIDE list lost a member; repairing the declared
     * m-list alone would discard candidates the diversity view needs). */
-  private[operators] def ensureFullIndexWide(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    val path = indexPath(d, m, s"fullw$DiversityWiden")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      hnswEdgesWide(s, d, m)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private[operators] def ensureFullIndexWide(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, "fullw", s"m$m")(hnswEdgesWide(s, d, m))
 
   /** [[ensureFullIndex]] with the dst VECTOR materialized onto every
-    * edge (variant "fullv") — the vector-resident adjacency layout a
-    * serving index uses so one search round touches exactly one
-    * stationary table: scan edges at the round's level, broadcast the
-    * (query-sized) frontier, score in place. Costs ×m storage over
-    * the vectors-once layout — the standard serving trade, paid ONCE
-    * at build time (the join below), never per query; without it each
-    * round needs a second corpus join plus a third broadcast just to
-    * look up dst vectors. Built once per fixture dir; DOUBLEs
-    * round-trip parquet bitwise, so serving from this layout is
-    * hash-identical. */
-  def ensureFullIndexVec(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    val path = indexPath(d, m, "fullv-dp")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      ensureFullIndex(s, d, m)
-        .join(Tables.embeddings(s, d)
-          .select(col("vec_id").as("dst"), col("embedding").as("dv")), "dst")
-        .select(col("level"), col("src"), col("dst"), col("dv"))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+    * edge — the vector-resident adjacency layout a serving index uses
+    * so one search round touches exactly one stationary table: scan
+    * edges at the round's level, broadcast the (query-sized) frontier,
+    * score in place. Costs ×m storage over the vectors-once layout —
+    * the standard serving trade, paid ONCE at build time (the join
+    * below), never per query; without it each round needs a second
+    * corpus join plus a third broadcast just to look up dst vectors. */
+  def ensureFullIndexVec(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, FullVecTag, s"m$m")(withDstVectors(s, d, ensureFullIndex(s, d, m)))
+
+  private def withDstVectors(s: SparkSession, d: String, edges: DataFrame): DataFrame =
+    edges.join(Tables.embeddings(s, d)
+        .select(col("vec_id").as("dst"), col("embedding").as("dv")), "dst")
+      .select(col("level"), col("src"), col("dst"), col("dv"))
 
   /** [[ensureFullIndex]] for the APPROXIMATE build — the persisted
     * twin of [[hnswEdgesApprox]]'s output, so the scale-path lifecycle
     * is complete: approximate build once, serve hierarchical searches
     * from storage, never pay the O(n²/blocks) exact build. Same
-    * (level, src, dst, dist) layout, separate store location. */
-  def ensureFullIndexApprox(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    // tag carries the build generation: nnd2 = NN-descent-refined
-    // (refine = 2) build — a store persisted by the pre-refinement
-    // builder must not serve this path
-    val path = indexPath(d, m, "full-approx-nnd2-dp")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      hnswEdgesApprox(s, d, m)
-        .select(col("level"), col("src"), col("dst"), col("dist"))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+    * (level, src, dst, dist) layout, separate store entry. */
+  def ensureFullIndexApprox(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, "full-approx", s"m$m")(
+      hnswEdgesApprox(s, d, m).select(col("level"), col("src"), col("dst"), col("dist")))
 
   /** Vector-resident serving layout of the approximate index (the
     * [[ensureFullIndexVec]] trade applied to [[ensureFullIndexApprox]]). */
-  def ensureFullIndexVecApprox(s: SparkSession, d: String, m: Int = 16): DataFrame = {
-    val path = indexPath(d, m, "fullv-approx-nnd2-dp")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      ensureFullIndexApprox(s, d, m)
-        .join(Tables.embeddings(s, d)
-          .select(col("vec_id").as("dst"), col("embedding").as("dv")), "dst")
-        .select(col("level"), col("src"), col("dst"), col("dv"))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  def ensureFullIndexVecApprox(s: SparkSession, d: String, m: Int = 16): DataFrame =
+    BuildStore.parquet(s, d, FullVecApproxTag, s"m$m")(
+      withDstVectors(s, d, ensureFullIndexApprox(s, d, m)))
 
   /** Incremental insert — the delta path of the reference's
     * insert-driven lifecycle (`src/hnsw.zig:73-117` grows the graph one
@@ -2439,7 +2371,7 @@ object Ann {
   private def upperGraph(
       s: SparkSession, d: String, m: Int, topLevel: Int,
       idxAll: DataFrame, lvlCounts: Map[Int, Long],
-      variant: String = "fullv-dp"): Option[UpperGraph] = {
+      tag: String): Option[UpperGraph] = {
     if (topLevel < 1) return None
     // ~2× slack: a node of level L is an adjacency src in every layer
     // l0..min(L, topLevel), and node counts halve per level, so the
@@ -2454,7 +2386,7 @@ object Ann {
     val l0 = (0 to topLevel).find(l => cumFrom(l) * bytesPerNode <= MaxUpperBytes)
     l0.map { l0v =>
       val sessPrefix = s"${System.identityHashCode(s)}|"
-      val key = s"$sessPrefix${storePath(d, s"m$m-$variant")}|$l0v|$topLevel"
+      val key = s"$sessPrefix${BuildStore.key(d, tag, s"m$m")}|$l0v|$topLevel"
       if (!upperCache.containsKey(key)) boundUpperCache(sessPrefix)
       upperCache.computeIfAbsent(key, _ => {
         val vecs = Tables.embeddings(s, d)
@@ -2563,7 +2495,7 @@ object Ann {
     // set — the driver hash gate and the in-test hierarchical
     // reference pin bitwise equality.
     val upper = upperGraph(s, d, m, topLevel, idxAll, lvlCounts,
-      if (approxIndex) "fullv-approx-nnd2-dp" else "fullv-dp")
+      if (approxIndex) FullVecApproxTag else FullVecTag)
     val joinTop = upper.map(_.l0 - 1).getOrElse(topLevel)
     // vector-resident adjacency: one table per round, no dst-vector
     // lookup join — see [[ensureFullIndexVec]]. Cached as PER-LEVEL
@@ -3004,10 +2936,10 @@ object Ann {
     // count() at plan-construction time, and annPqRaw reaches this
     // codebook twice (LUT + codes), so an unmemoized check would bill
     // two extra Spark jobs to every PQ plan construction.
-    // keyed through storePath so the CONTENT fingerprint rides along:
-    // an in-place fixture regeneration (re-keyed vec_ids, same dir)
-    // must re-validate, not skip the completeness check it exists for
-    val vkey = s"${System.identityHashCode(s)}|${storePath(d, "pqvalidation")}"
+    // keyed through BuildStore so the CONTENT digest rides along: an
+    // in-place fixture regeneration (re-keyed vec_ids, same dir) must
+    // re-validate, not skip the completeness check it exists for
+    val vkey = s"${System.identityHashCode(s)}|${BuildStore.key(d, "pqvalidation")}"
     if (!pqValidated.contains(vkey)) {
       val n = cb.count()
       require(n == PqSubs.toLong * PqK,

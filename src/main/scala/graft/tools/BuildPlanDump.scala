@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Dev tool: dump `explain("formatted")` of the APPROX BUILD's lazy
   * audit lineage ([[graft.operators.Ann.hnswEdgesApproxForAudit]]) —
@@ -14,15 +14,7 @@ object BuildPlanDump {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-buildplandump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-buildplandump", 8, "ERROR")
     val df = graft.operators.Ann.hnswEdgesApproxForAudit(spark, sfDir)
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Runs the approximate build's seed-family DECISION stages on a
   * fixture and prints the whole measured trail WITHOUT paying for the
@@ -28,16 +29,7 @@ object ChooserReport {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/repo/fixtures/sf100")
     val m = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-chooser-report")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-chooser-report", LocalSession.cpus(32))
     import graft.operators.Ann
     val ceiling = args.lift(2).map(_.toLong)
       .getOrElse(Ann.DefaultScoredMassCeiling)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Prints [[graft.operators.Similarity.semanticDedupMeasured]]'s
   * chooser outcome — the measured capture curve, exact candidate
@@ -24,17 +24,9 @@ object DedupChoiceReport {
     val stride = args.lift(2).map(_.toLong).getOrElse(DefaultStride)
     val massPerRow = args.lift(3).map(_.toLong).getOrElse(DefaultMassPerRow)
     val cellSize = args.lift(4).map(_.toInt).getOrElse(DefaultCellSize)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-dedup-choice")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-dedup-choice", LocalSession.cpus(32))
     // at the declared-query defaults the REPORT path may serve the
-    // persisted (version-stamped, invariant-validated) outcome —
+    // persisted (code-keyed, invariant-validated) outcome —
     // build-once/report-many; any other knob set measures live.
     // Compared against the NAMED constants, never re-hardcoded
     // literals — a future default change must move this test with it

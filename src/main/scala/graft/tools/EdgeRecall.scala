@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Scratch: edge recall of the approximate index build vs the exact
   * m-NN graph at a given fixture + knob setting — the measurement
@@ -15,16 +15,7 @@ object EdgeRecall {
     val nProj = args.lift(1).map(_.toInt).getOrElse(8)
     val w = args.lift(2).map(_.toDouble).getOrElse(0.1)
     val probe = args.lift(3).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-edge-recall")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-edge-recall", LocalSession.cpus(32))
     val key = (df: org.apache.spark.sql.DataFrame) =>
       df.select("level", "src", "dst").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Sampled edge recall of the approximate index build at scales where
   * the full exact m-NN graph is out of reach (sf10: 200k² pairs). For
@@ -37,16 +38,7 @@ object EdgeRecallSampled {
     val refine = args.lift(3).map(_.toInt).getOrElse(2)
     val ceiling = args.lift(4).map(_.toLong)
       .getOrElse(graft.operators.Ann.DefaultScoredMassCeiling)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-edge-recall-sampled")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-edge-recall-sampled", LocalSession.cpus(32))
     import graft.operators.Ann
     import graft.functions.expressions.TopMEdges
     import org.apache.spark.sql.graftbridge.SqlBridge

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+
+import graft.LocalSession
 
 /** Attribution probe for approximate-build recall at a given bucket
   * key width: for a deterministic sample of sources and their EXACT
@@ -45,16 +46,7 @@ object KeyCaptureDiagnostic {
     val cap = args.lift(5).map(_.toInt).getOrElse(1024)
     val nProj = args.lift(6).map(_.toInt).getOrElse(8)
     val ws = args.lift(7).getOrElse("0.1").split(",").map(_.toDouble).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-key-capture-diagnostic")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-key-capture-diagnostic", LocalSession.cpus(32))
     import graft.functions.VectorFunctions.{dot, squaredL2}
     import graft.functions.expressions.TopMEdges
     import graft.operators.HnswLevel

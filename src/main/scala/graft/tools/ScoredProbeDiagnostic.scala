@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
+
 /** Measures what SCORED multiprobe (Lv et al. 2007, multi-probe LSH)
   * buys on a given corpus: for a ladder of (k, w) key cells — wider
   * than grid multiprobe can afford, whose probe explode is
@@ -44,16 +46,7 @@ object ScoredProbeDiagnostic {
     val stride = args.lift(1).map(_.toInt).getOrElse(1000)
     val m = args.lift(2).map(_.toInt).getOrElse(16)
     val mode = args.lift(3).getOrElse("broad")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scored-probe-diagnostic")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-scored-probe-diagnostic", LocalSession.cpus(32))
     import graft.operators.Ann
 
     val e = graft.Tables.embeddings(spark, d)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{LocalSession, Tables}
 import graft.functions.VectorFunctions._
 import graft.operators.{Ann, Similarity}
 
@@ -25,16 +24,7 @@ object SemanticProbeSweep {
     val stride = args.lift(2).map(_.toLong).getOrElse(1L)
     val ps = args.lift(3).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 2, 4))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-semantic-probe-sweep")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-semantic-probe-sweep", LocalSession.cpus(32))
 
     val e = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val sample = e.filter(col("vec_id") % stride === 0)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Prints [[graft.operators.Similarity.semanticPairRecall]] — the
   * measured fraction of true ε-pairs that semantic_dedup's Voronoi
@@ -22,16 +22,7 @@ object SemanticRecallReport {
     val eps = args.lift(1).map(_.toDouble).getOrElse(1.1)
     val stride = args.lift(2).map(_.toLong).getOrElse(1L)
     val p = args.lift(3).map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-semantic-recall")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-semantic-recall", LocalSession.cpus(32))
     val r = p match {
       case Some(pp) => graft.operators.Similarity.semanticPairRecallProbe(
         spark, d, eps = eps, stride = stride, p = pp)

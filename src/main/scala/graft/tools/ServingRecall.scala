@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** End-user recall of the full SERVING path at scale: the hierarchical
   * descent + beam walk over the persisted approximate index
@@ -36,16 +37,7 @@ object ServingRecall {
     val arms = args.lift(4).map(_.split(",").toSet)
       .getOrElse(Set("exact", "approx"))
     val rounds = args.lift(5).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-serving-recall")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-serving-recall", LocalSession.cpus(32))
     import graft.operators.Ann
 
     val e = graft.Tables.embeddings(spark, d)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Ann, HnswLevel, Knn, SessionConf}
+import graft.operators.{Ann, BuildStore, HnswLevel, Knn, SessionConf}
 
 /** Recall and structure tests for the approximate operators — the
   * engine's analogue of the reference's "Large Dataset" behavioral
@@ -485,14 +485,14 @@ class AnnSpec extends AnyFunSuite {
   test("dedup chooser lifecycle: declared stats is session-pure, stored path validates + serves") {
     import graft.operators.Similarity
     val path = Similarity.dedupChoicePath(d)
-    def rm(f: java.io.File): Unit = Similarity.deleteRecursively(f)
+    def rm(f: java.io.File): Unit = BuildStore.deleteRecursively(f)
     rm(new java.io.File(path)) // hermetic: drop any earlier store
     Similarity.clearChooserMemo()
-    // the store key carries the code revision and a CONTENT digest of
-    // the embeddings bytes (r11 fixes 1a + 5) — not just size+mtime
-    assert(path.contains(Similarity.ChooserStoreVersion),
-      s"store key lacks the code-version stamp: $path")
-    assert(path.contains(Similarity.embeddingsContentDigest(d)),
+    // the store key carries the engine-code fingerprint and a CONTENT
+    // digest of the embeddings bytes — not just size+mtime
+    assert(path.contains(BuildStore.codeFingerprint),
+      s"store key lacks the engine-code fingerprint: $path")
+    assert(path.contains(BuildStore.contentDigest(d)),
       s"store key lacks the embeddings content digest: $path")
     val before = Similarity.chooserMeasurements
     val statsDf = Similarity.dedupStats(spark, d)
@@ -510,7 +510,7 @@ class AnnSpec extends AnyFunSuite {
     val s1 = statsDf.collect() // measures + seeds
     assert(Similarity.chooserMeasurements == before + 1,
       "first declared dedup_stats must run the live measurement exactly once")
-    assert(new java.io.File(s"$path/_SUCCESS").exists(),
+    assert(BuildStore.published(path),
       "measured run did not seed the persisted chooser outcome")
     // same session again: served from the IN-SESSION memo (pure — same
     // code, same bytes), never from the cross-session parquet store
@@ -526,7 +526,7 @@ class AnnSpec extends AnyFunSuite {
     try v.count() finally Ann.freeBuildState(a)
     assert(Similarity.chooserMeasurements == before + 2,
       "semantic_dedup_measured must keep measuring live")
-    assert(new java.io.File(s"$path/_SUCCESS").exists(),
+    assert(BuildStore.published(path),
       "live measured run did not re-seed the persisted outcome")
     // a FRESH session (memo cleared) serving from storage: the REPORT
     // entry point re-measures zero times and returns identical rows
@@ -565,7 +565,7 @@ class AnnSpec extends AnyFunSuite {
       massPerRow = 64)
     try v2.count() finally Ann.freeBuildState(a2)
     val cOther = Similarity.lastDedupChoice.get
-    assert(new java.io.File(s"$otherPath/_SUCCESS").exists(),
+    assert(BuildStore.published(otherPath),
       "knob run did not seed its own store")
     Similarity.clearChooserMemo()
     val after = Similarity.chooserMeasurements
@@ -612,9 +612,9 @@ class AnnSpec extends AnyFunSuite {
       // sibling is discarded (ADVICE r11: a reader must never observe
       // an in-progress overwrite)
       val threads = (1 to 4).map(_ => new Thread(() =>
-        Similarity.writeDedupChoice(spark, path, choice)))
+        BuildStore.publish(path)(Similarity.choiceFrame(spark, choice))))
       threads.foreach(_.start()); threads.foreach(_.join())
-      assert(new java.io.File(s"$path/_SUCCESS").exists(),
+      assert(BuildStore.published(path),
         "no complete store after concurrent publishes")
       assert(Similarity.readDedupChoice(spark, path) == choice,
         "published rows corrupted under concurrency")
@@ -625,24 +625,23 @@ class AnnSpec extends AnyFunSuite {
       // a stale partial (dir without _SUCCESS — a writer died
       // mid-publish) must not block the slot forever: the next writer
       // clears it and publishes
-      Similarity.deleteRecursively(new java.io.File(path))
+      BuildStore.deleteRecursively(new java.io.File(path))
       val partial = new java.io.File(path)
       assert(partial.mkdirs())
       val junk = new java.io.File(partial, "part-junk")
       java.nio.file.Files.writeString(junk.toPath, "stale")
-      Similarity.writeDedupChoice(spark, path, choice)
-      assert(new java.io.File(s"$path/_SUCCESS").exists(),
+      BuildStore.publish(path)(Similarity.choiceFrame(spark, choice))
+      assert(BuildStore.published(path),
         "stale successor-less partial permanently blocked seeding")
       assert(Similarity.readDedupChoice(spark, path) == choice,
         "publish over a stale partial lost the rows")
-    } finally Similarity.deleteRecursively(tmp)
+    } finally BuildStore.deleteRecursively(tmp)
   }
 
   test("chooser store key is content-sensitive: same size+mtime, different bytes miss the store") {
-    // closes the size+mtime collision channel for the one store whose
-    // VALUES flow into output: a fixture regenerated in place with
-    // identical file metadata but different bytes must land on a
-    // different chooser key
+    // closes the size+mtime collision channel: a fixture regenerated in
+    // place with identical file metadata but different bytes must land
+    // on a different chooser key AND a different index key
     import graft.operators.Similarity
     val tmp = java.nio.file.Files.createTempDirectory("graft_digest").toFile
     val dst = new java.io.File(tmp, "embeddings.parquet")
@@ -653,6 +652,7 @@ class AnnSpec extends AnyFunSuite {
     assert(dst.setWritable(true), "could not make the copy writable")
     try {
       val key1 = Similarity.dedupChoicePath(tmp.getPath)
+      val index1 = BuildStore.key(tmp.getPath, "full-approx", "m16")
       val mtime = dst.lastModified()
       val raf = new java.io.RandomAccessFile(dst, "rw")
       try { // flip one byte; size unchanged
@@ -664,10 +664,97 @@ class AnnSpec extends AnyFunSuite {
       assert(dst.setLastModified(mtime), "could not restore mtime")
       val key2 = Similarity.dedupChoicePath(tmp.getPath)
       assert(key1 != key2,
-        "store key collided across different bytes at identical size+mtime")
+        "chooser key collided across different bytes at identical size+mtime")
+      val index2 = BuildStore.key(tmp.getPath, "full-approx", "m16")
+      assert(index1 != index2,
+        "index key collided across different bytes at identical size+mtime")
     } finally {
       dst.delete(); tmp.delete()
     }
+  }
+
+  /** A fresh copy of fixture `d` (new mtimes, so a new content key). */
+  private def freshFixtureCopy(): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fresh").toFile
+    new java.io.File(d).listFiles().foreach(f => java.nio.file.Files.copy(
+      f.toPath, new java.io.File(dir, f.getName).toPath))
+    dir
+  }
+
+  test("two concurrent ensureFullIndex calls publish one entry and serve the single-thread rows") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("level", "src", "dst", "dist").collect().map(_.toString).toSeq.sorted
+    val single = rows(Ann.ensureFullIndex(spark, d))
+    val copy = freshFixtureCopy()
+    try {
+      val entry = new java.io.File(BuildStore.path(copy.getPath, "full", "m16"))
+      assert(!entry.exists(), s"fresh copy already has an entry: $entry")
+      val out = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Seq[String]]]()
+      val threads = (0 until 2).map(i => new Thread(() => out.put(i,
+        try Right(rows(Ann.ensureFullIndex(spark, copy.getPath)))
+        catch { case t: Throwable => Left(t) })))
+      threads.foreach(_.start()); threads.foreach(_.join())
+      (0 until 2).foreach { i =>
+        out.get(i) match {
+          case Left(t) => fail(s"thread $i failed", t)
+          case Right(r) => assert(r == single, s"thread $i rows diverged from the single-thread build")
+        }
+      }
+      assert(BuildStore.published(entry.getPath), s"no published entry at $entry")
+      val siblings = entry.getParentFile.listFiles().map(_.getName)
+        .filter(_.startsWith(entry.getName))
+      assert(siblings.toSeq == Seq(entry.getName),
+        s"expected one published directory, found ${siblings.mkString(", ")}")
+      val tmps = entry.getParentFile.listFiles().map(_.getName).filter(_.contains(".tmp-"))
+      assert(tmps.isEmpty, s"tmp siblings left behind: ${tmps.mkString(", ")}")
+    } finally BuildStore.deleteRecursively(copy)
+  }
+
+  test("build store key: a new m or a new code fingerprint picks a new entry, which rebuilds") {
+    var builds = 0
+    def build = { builds += 1; spark.range(3).toDF("id") }
+    def stored(m: Int) = BuildStore.parquet(spark, d, "spec", s"m$m")(build).count()
+    assert(stored(16) == 3 && builds == 1)
+    assert(stored(16) == 3 && builds == 1, "a published entry was rebuilt")
+    assert(stored(8) == 3 && builds == 2, "changing m did not pick a new entry")
+    // the entry name ends in the code fingerprint, which hashes the
+    // engine's class bytes: one changed byte is a new entry
+    val path16 = BuildStore.path(d, "spec", "m16")
+    assert(path16.endsWith(s"-${BuildStore.codeFingerprint}"), path16)
+    val classes = new java.io.File(
+      Ann.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val copy = java.nio.file.Files.createTempDirectory("graft_code").toFile
+    try {
+      val src = new java.io.File(classes, "graft").toPath
+      java.nio.file.Files.walk(src).forEach { p =>
+        val dst = copy.toPath.resolve(classes.toPath.relativize(p))
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(p, dst)
+      }
+      assert(BuildStore.codeFingerprintOf(copy) == BuildStore.codeFingerprint,
+        "the same class bytes must give the same fingerprint")
+      val cls = new java.io.File(copy, "graft/operators/BuildStore.class")
+      val bytes = java.nio.file.Files.readAllBytes(cls.toPath)
+      bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0xff).toByte
+      java.nio.file.Files.write(cls.toPath, bytes)
+      val changed = BuildStore.codeFingerprintOf(copy)
+      assert(changed != BuildStore.codeFingerprint, "a changed class byte kept the fingerprint")
+      val other = path16.stripSuffix(BuildStore.codeFingerprint) + changed
+      BuildStore.publish(other)(build)
+      assert(builds == 3 && BuildStore.published(other),
+        "the new code fingerprint's entry was not built")
+      // a jar is fingerprinted by its bytes; any other form is refused
+      val jar = new java.io.File(copy, "engine.jar")
+      java.nio.file.Files.write(jar.toPath, Array[Byte](1, 2, 3))
+      val jarFp = BuildStore.codeFingerprintOf(jar)
+      java.nio.file.Files.write(jar.toPath, Array[Byte](1, 2, 4))
+      assert(BuildStore.codeFingerprintOf(jar) != jarFp, "jar bytes not fingerprinted")
+      val odd = new java.io.File(copy, "engine.zip")
+      java.nio.file.Files.write(odd.toPath, Array[Byte](1))
+      val err = intercept[IllegalStateException](BuildStore.codeFingerprintOf(odd))
+      assert(err.getMessage.contains(odd.getPath), err.getMessage)
+      BuildStore.deleteRecursively(new java.io.File(other))
+    } finally BuildStore.deleteRecursively(copy)
   }
 
   test("sampled-exact ground truth is memoized: second call runs 0 jobs, freed entries rebuild") {

@@ -358,6 +358,6 @@ class TextOpsSpec extends AnyFunSuite {
     val shortScores = li.filter(r => Seq(2L, 5L).contains(r.getLong(0)))
     assert(shortScores.forall(_.getLong(3) == 0L),
       s"sub-3-char docs scored on fabricated trigrams: ${shortScores.mkString(",")}")
-    graft.operators.Similarity.deleteRecursively(tmp.toFile)
+    graft.operators.BuildStore.deleteRecursively(tmp.toFile)
   }
 }
