@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.SqlBridge.{column, expression}
 
 import graft.Tables
+import graft.functions.expressions.{ElementHash, MinHashSignature, SimHash, WordShingles}
 
 /** Text-analysis / document-dedup operators over the `documents` table
   * — the LLM-training-data-pipeline surface (BASELINE.json north star).
@@ -15,16 +17,22 @@ import graft.Tables
   * near-dup stack: exact (content hash), SimHash (Charikar), MinHash +
   * LSH banding (Broder), and exact shingle-set Jaccard as ground truth.
   *
-  * Everything is expression-level (no UDFs): tokenization `split`,
-  * shingling `transform(sequence(...))`, hashing `md5` → 60-bit int via
-  * `conv`, signatures via array HOFs. All integer arithmetic → results
-  * are bit-identical to the DuckDB oracles by construction; the only
-  * doubles are single divisions of identical integers.
+  * Everything is expression-level (no UDFs): tokenization `split`;
+  * word shingles, element-wise md5 → 60-bit hashes and the MinHash
+  * signature through the codegen'd kernels of
+  * [[graft.functions.expressions.TextKernels]] (each bit-identical to
+  * the `transform(...)` lambda it replaced, which the oracle SQL still
+  * states as `list_transform`);
+  * SimHash through [[graft.functions.expressions.SimHash]]. All integer
+  * arithmetic → results are bit-identical to the DuckDB oracles by
+  * construction; the only doubles are single divisions of identical
+  * integers.
   *
   * Scale notes:
   *   - per-doc maps (stats, fingerprints, signatures) are shuffle-free
-  *     and whole-stage-codegen'd except HOF lambdas (fine off the
-  *     bench-critical path);
+  *     and whole-stage-codegen'd; the interpreted HOF lambdas left are
+  *     MinHash's 4 band keys, the langid trigram split and the
+  *     `hybrid_bm25` score fold;
   *   - the exact Jaccard join explodes shingles and equi-joins — on a
   *     skewed web corpus hot shingles need salting or prefix filtering;
   *     MinHash-LSH is the scale path: O(docs·K) signature work, then an
@@ -40,20 +48,45 @@ object TextOps {
   private def toks(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).withColumn("toks", split(col("text"), " "))
 
+  /** `width`-token windows of `toks`, one every `step` tokens, joined
+    * `concat_ws(' ', …)`-style ([[WordShingles]]). */
+  private def wordShingles(width: Int, step: Int): Column =
+    column(WordShingles(expression(col("toks")), width, step))
+
+  /** Element-wise md5 hashes of a string-array column in one of the
+    * [[ElementHash]] forms (null element → null element). */
+  private def elementHash(c: Column, form: Int): Column =
+    column(ElementHash(expression(c), form))
+
+  /** `bits`-wide SimHash of an ARRAY<BIGINT> column ([[SimHash]]). */
+  private def simhash(hs: Column, bits: Int): Column = column(SimHash(expression(hs), bits))
+
+  /** Ordered 3-word shingles (with repeats) — the ONE definition of
+    * the shingle transform, shared with the oracle's
+    * `list_transform(generate_series(1, len(toks)-2), …)`; a doc with
+    * fewer than 3 tokens (or null text) has none. [[shingled]] wraps it
+    * with array_distinct for set semantics and [[repetitionStats]]
+    * consumes it ordered. */
+  private[graft] def orderedShingles: Column =
+    coalesce(wordShingles(3, 1), typedLit(Seq.empty[String]))
+
   /** docs with distinct 3-word shingles (ordered shingling, distinct
     * for set semantics — a DEFINITION shared with the oracle). */
-  /** Ordered 3-word shingles (with repeats) — the ONE definition of
-    * the shingle transform; [[shingled]] wraps it with array_distinct
-    * for set semantics and [[repetitionStats]] consumes it ordered. */
-  private def orderedShingles: org.apache.spark.sql.Column =
-    when(size(col("toks")) >= 3,
-      expr("transform(sequence(1, size(toks)-2), i -> concat_ws(' ', element_at(toks,i), element_at(toks,i+1), element_at(toks,i+2)))"))
-      .otherwise(expr("array()"))
-
   private def shingled(s: SparkSession, d: String): DataFrame =
     toks(s, d).withColumn("sh", array_distinct(orderedShingles))
 
-  /** 60-bit integer hash of a string via md5 (engine-portable). */
+  /** [[shingled]] restricted to docs with at least one shingle. The
+    * predicate is the token count (≥ 3 tokens ⟺ a non-empty shingle
+    * set), stated below the shingle projection: a `size(sh) > 0` filter
+    * above it is pushed down by substituting the whole shingle
+    * expression into the Filter, which then shingles every document a
+    * second time. */
+  private def shingledNonEmpty(s: SparkSession, d: String): DataFrame =
+    toks(s, d).filter(size(col("toks")) >= 3)
+      .withColumn("sh", array_distinct(orderedShingles))
+
+  /** 60-bit integer hash of a string via md5 (engine-portable); the
+    * per-element form over arrays is [[ElementHash]]. */
   private val hash60 = "CAST(conv(substr(md5(%s), 1, 15), 16, 10) AS BIGINT)"
 
   // ---------------------------------------------------------------- stats
@@ -152,17 +185,13 @@ object TextOps {
 
   /** Per-doc fingerprints: full md5 plus a 48-bit SimHash over distinct
     * 3-word shingles (Charikar: sign of per-bit ±1 vote, packed). */
-  def docFingerprint(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{column, expression}
-    import graft.functions.expressions.SimHash48
-    val hs = expr(s"transform(sh, t -> ${hash60.format("t")})")
+  def docFingerprint(s: SparkSession, d: String): DataFrame =
     shingled(s, d)
       .select(
         col("doc_id"),
         md5(col("text")).as("md5"),
-        column(SimHash48(expression(hs))).as("sim48"))
+        simhash(elementHash(col("sh"), ElementHash.Plain), 48).as("sim48"))
       .orderBy("doc_id")
-  }
 
   // ----------------------------------------------------------------- dedup
 
@@ -195,8 +224,8 @@ object TextOps {
     * DuckDB oracle is the plain quadratic form. */
   def jaccardPairs(s: SparkSession, d: String, theta: Double = 0.5,
                    hotDf: Int = 32, salts: Int = 8): DataFrame = {
-    // The shingle HOF chain is interpreted (CodegenFallback); both join
-    // sides and the size table reuse it, so materialize it once.
+    // both join sides and the size table read the shingle sets, so
+    // materialize them once rather than shingling the corpus three times
     val sh = shingled(s, d).select(col("doc_id"), col("sh")).cache()
     val e = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val sz = sh.select(col("doc_id"), size(col("sh")).as("n"))
@@ -240,16 +269,13 @@ object TextOps {
     * parameterization is [[simhash64NearDup]]: 64-bit fingerprints,
     * hd≤3, 4×16-bit bands — 2¹⁰× smaller buckets, same plan shape. */
   def simhashNearDup(s: SparkSession, d: String, maxHd: Int = 8): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{column, expression}
-    import graft.functions.expressions.SimHash48
     // shingle-less docs are EXCLUDED from near-dup judging (not from
     // the declared doc_fingerprint, whose contract is a row per doc):
     // SimHash over zero shingles is 0 — "no signal", not a signature —
     // so every sub-3-token doc would share fingerprint 0, collide in
     // every band, and be reported as hamming-0 near-dups of each other
-    val hs = expr(s"transform(sh, t -> ${hash60.format("t")})")
-    val f = shingled(s, d).filter(size(col("sh")) > 0)
-      .select(col("doc_id"), column(SimHash48(expression(hs))).as("sim48"))
+    val f = shingledNonEmpty(s, d)
+      .select(col("doc_id"), simhash(elementHash(col("sh"), ElementHash.Plain), 48).as("sim48"))
       .cache()
     val widths = Seq(6, 6, 6, 5, 5, 5, 5, 5, 5)
     val offsets = widths.scanLeft(0)(_ + _).init
@@ -278,17 +304,11 @@ object TextOps {
     * engine, so the width is built by composition). Bit b of an
     * element hash: b<32 → bit b of h1, b≥32 → bit b−32 of h2 — the
     * parity contract the DuckDB oracle reproduces bit-for-bit. */
-  private def fingerprint64(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SqlBridge.{column, expression}
-    import graft.functions.expressions.SimHash
-    val h1 = hash60.format("t")
-    val h2 = hash60.format("concat('s2:', t)")
-    val hs64 = expr(s"transform(sh, t -> ($h1 & 4294967295L) | shiftleft($h2, 32))")
+  private def fingerprint64(s: SparkSession, d: String): DataFrame =
     // shingle-less docs excluded — see [[simhashNearDup]]: a zero-
     // shingle SimHash is 0 for every such doc, not a signature
-    shingled(s, d).filter(size(col("sh")) > 0)
-      .select(col("doc_id"), column(SimHash(expression(hs64), 64)).as("sim64"))
-  }
+    shingledNonEmpty(s, d)
+      .select(col("doc_id"), simhash(elementHash(col("sh"), ElementHash.Wide64), 64).as("sim64"))
 
   /** The SCALE-SAFE simhash near-dup declared for production: 64-bit
     * fingerprint, Hamming ≤ 3, candidates from 4 bands × 16 bits
@@ -330,10 +350,9 @@ object TextOps {
     * shingle sets). */
   private def lshBandsWithShingles(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val sh = shingled(s, d).select(col("doc_id"), col("sh")).cache()
-    // CollapseProject would inline `hs` into all 16 signature lambdas
-    // and `sig` into all 4 band keys — recomputing the interpreted
-    // md5 chain ~64× per doc, twice more via the self-join. Caching
-    // `bands` cuts the lineage so the hash chain runs exactly once.
+    // Caching `bands` cuts the lineage, so the two sides of the band
+    // self-join (and crossSplitContamination's split joins) read the
+    // signature instead of hashing every shingle again.
     // Shingle-less docs (< 3 tokens) carry NO signature: an empty
     // shingle set makes every array_min NULL, every band key md5('')
     // — ALL such docs band-collide pairwise and the exact-Jaccard
@@ -341,10 +360,9 @@ object TextOps {
     // no shingles cannot be near-dup-judged; it produces no bands
     // (the oracles state the same len(sh) > 0 predicate).
     val sig = sh.filter(size(col("sh")) > 0)
-      .withColumn("hs", expr(s"transform(sh, t -> ${hash60.format("t")} % 2147483647)"))
-      .withColumn("sig", expr(
-        "transform(sequence(0,15), i -> array_min(transform(hs, h -> ((2*i+1)*h + i*7919) % 2147483647)))"))
-      .select(col("doc_id"), col("sh"), col("sig"))
+      .select(col("doc_id"), col("sh"),
+        column(MinHashSignature(expression(elementHash(col("sh"), ElementHash.Mod31))))
+          .as("sig"))
     val bands = sig.select(
         col("doc_id"),
         explode(expr(
@@ -519,10 +537,10 @@ object TextOps {
     * shuffle; (doc, probe) rows are unique by construction because
     * shingle sets are per-doc distinct. */
   def contaminationScan(s: SparkSession, d: String, nProbes: Int = 5): DataFrame = {
-    // cached: the interpreted shingling HOF chain feeds BOTH the probe
+    // cached: the exploded shingle table feeds BOTH the probe
     // aggregate and the scan join — uncached it ran twice (and the
     // broadcast build forced the second run serially before the scan),
-    // measured 13.0 s → 0.6 s at sf0.1
+    // measured 13.0 s → 0.6 s at sf0.1 with the interpreted shingler
     val sh = shingled(s, d)
       .select(col("doc_id"), explode(col("sh")).as("shingle")).cache()
     val probes = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -1019,9 +1037,7 @@ object TextOps {
     val p = toks(s, d)
       .filter(size(col("toks")) >= width)
       .select(col("doc_id"),
-        explode(expr(
-          s"""transform(sequence(0, size(toks) div $width - 1),
-                i -> ${hash60.format(s"concat_ws(' ', slice(toks, i*$width+1, $width))")})""")).as("ph"))
+        explode(elementHash(wordShingles(width, width), ElementHash.Plain)).as("ph"))
       .cache()
     val boiler = p.groupBy(col("ph"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -1073,11 +1089,9 @@ object TextOps {
   def substringDedup(s: SparkSession, d: String, width: Int = 5): DataFrame = {
     val sh = toks(s, d)
       .filter(size(col("toks")) >= width)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(1, size(toks) - $width + 1),
-              i -> struct(i AS pos, ${hash60.format(s"concat_ws(' ', slice(toks, i, $width))")} AS sh))""")).as("ps"))
-      .select(col("doc_id"), col("ps.pos").cast("long").as("pos"),
-        col("ps.sh").as("sh"))
+      .select(col("doc_id"),
+        posexplode(elementHash(wordShingles(width, 1), ElementHash.Plain)).as(Seq("p0", "sh")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("sh"))
       .cache()
     val dup = sh.groupBy(col("sh"))
       .agg(countDistinct(col("doc_id")).as("nd"))

@@ -318,6 +318,114 @@ class FunctionsSpec extends AnyFunSuite {
     assert(lit1.getStruct(0).getDouble(0) == 9.0 && lit1.getStruct(0).getInt(1) == 2)
   }
 
+  test("text kernels ≡ the HOF strings they replace: shingles, hashes, minhash, " +
+       "band keys, fingerprints over sf0.01 + edge rows, both execution paths") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.graftbridge.SqlBridge.{column, expression}
+    import graft.functions.expressions.{ElementHash, MinHashSignature, SimHash}
+    import spark.implicits._
+    // the retired lambda strings, verbatim — the semantics (and the
+    // oracle SQL's) the kernels must reproduce bit for bit
+    val h60 = "CAST(conv(substr(md5(%s), 1, 15), 16, 10) AS BIGINT)"
+    val hofShingles = when(size(col("toks")) >= 3, expr(
+      "transform(sequence(1, size(toks)-2), i -> concat_ws(' ', element_at(toks,i), " +
+        "element_at(toks,i+1), element_at(toks,i+2)))")).otherwise(expr("array()"))
+    val hofH60 = s"transform(sh, t -> ${h60.format("t")})"
+    val hofH31 = s"transform(sh, t -> ${h60.format("t")} % 2147483647)"
+    val hofH64 = s"transform(sh, t -> (${h60.format("t")} & 4294967295L) | " +
+      s"shiftleft(${h60.format("concat('s2:', t)")}, 32))"
+    val hofSig = "transform(sequence(0,15), i -> " +
+      "array_min(transform(h31, h -> ((2*i+1)*h + i*7919) % 2147483647)))"
+    // minhash's band-key lambda, unchanged in TextOps: fed both signatures
+    val bandKeys = "transform(sequence(0,3), b -> " +
+      "md5(array_join(transform(slice(sig, b*4+1, 4), x -> CAST(x AS STRING)), '-')))"
+    def k(e: org.apache.spark.sql.catalyst.expressions.Expression): Column = column(e)
+    def hash(c: String, form: Int): Column = k(ElementHash(expression(col(c)), form))
+    def simhash(c: String, bits: Int): Column = k(SimHash(expression(col(c)), bits))
+    def chain(toks: DataFrame, kernel: Boolean): Array[org.apache.spark.sql.Row] = {
+      val sh = toks
+        .withColumn("osh", if (kernel) operators.TextOps.orderedShingles else hofShingles)
+        .withColumn("sh", array_distinct(col("osh")))
+      val hs =
+        if (kernel) sh.withColumn("h60", hash("sh", ElementHash.Plain))
+          .withColumn("h31", hash("sh", ElementHash.Mod31))
+          .withColumn("h64", hash("sh", ElementHash.Wide64))
+        else sh.withColumn("h60", expr(hofH60)).withColumn("h31", expr(hofH31))
+          .withColumn("h64", expr(hofH64))
+      hs.withColumn("sig",
+          if (kernel) k(MinHashSignature(expression(col("h31")))) else expr(hofSig))
+        .withColumn("bk", expr(bandKeys))
+        .withColumn("f48", simhash("h60", 48))
+        .withColumn("f64", simhash("h64", 64))
+        .select("doc_id", "osh", "sh", "h60", "h31", "h64", "sig", "bk", "f48", "f64")
+        .orderBy("doc_id").collect()
+    }
+    def assertSame(hof: Array[org.apache.spark.sql.Row],
+                   ker: Array[org.apache.spark.sql.Row], what: String): Unit = {
+      assert(hof.length == ker.length, what)
+      hof.zip(ker).foreach { case (a, b) =>
+        assert(a == b, s"$what: doc ${a.get(0)} diverges\n HOF:    $a\n kernel: $b")
+      }
+    }
+    val texts = Seq(
+      "one", "one two", "one two three", "",                     // 1/2/3 tokens; "" is one empty token
+      " lead space", "trail space here ", "double  space  here", // empty tokens
+      "数据 管道 去重 数据 管道 去重", "Größe Übung Straße Größe Übung",   // zh / de multi-byte UTF-8
+      "a b c a b c a b c d",                                   // repeated shingles: distinct keeps first-seen order
+      null)                                                    // null text: no shingles
+    val fromText = (Tables.documents(spark, "/root/testdata/sf0.01")
+        .select(col("doc_id"), col("text"))
+        .unionByName(texts.zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text")))
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val nullElems = Seq(                                       // 0 tokens; null tokens
+      (-100L, Seq.empty[String]), (-101L, Seq("a", null, "b", "c")),
+      (-102L, Seq[String](null, null, null)), (-103L, Seq("x", null, null, "y", "z")))
+      .toDF("doc_id", "toks")
+    // codegen path: the repartition keeps the projections off the
+    // driver-side LocalRelation folding, so they compile in WSCG
+    val all = fromText.unionByName(nullElems).repartition(4)
+    val ker = chain(all, kernel = true)
+    assert(ker.length == 500 + texts.size + 4)
+    assertSame(chain(all, kernel = false), ker, "codegen path")
+    val sample = ker.filter(_.getLong(0) == -10L).head // the repeated-shingle row
+    assert(sample.getSeq[String](1).size == 8 && sample.getSeq[String](2) ==
+      Seq("a b c", "b c a", "c a b", "b c d"), s"$sample")
+    // interpreted path: a literal token array constant-folds through
+    // eval on the driver — the folded plan keeps no kernel call
+    (texts.filter(_ != null).map(_.split(" ", -1).toSeq) ++
+        Seq(Seq.empty[String], Seq("a", null, "b", "c"))).foreach { t =>
+      val lit1 = spark.range(1).select(lit(0L).as("doc_id"), typedLit(t).as("toks"))
+      assertSame(chain(lit1, kernel = false), chain(lit1, kernel = true), s"interpreted $t")
+      val f = lit1.select(operators.TextOps.orderedShingles.as("o")).queryExecution.optimizedPlan
+      assert(!f.toString.contains("word_shingles"), s"kernel survived constant folding:\n$f")
+    }
+    // null ELEMENTS of the hash and signature inputs, both paths:
+    // a null string hashes to null; array_min skips nulls, and an
+    // all-null or empty input gives a null at every signature slot
+    val gen = spark.range(2).select(
+      array(lit("x"), when(col("id") > 5, lit("y"))).as("sh"),
+      array(lit(5L) + col("id"), when(col("id") > 5, lit(1L)), lit(9L)).as("h31"),
+      array(when(col("id") > 5, lit(1L))).as("allnull"),
+      when(col("id") > 5, array(lit(1L))).otherwise(array().cast("array<bigint>")).as("empty"))
+    val folded = spark.sql(
+      """SELECT array('x', CAST(NULL AS STRING)) AS sh,
+        |  array(5L, CAST(NULL AS BIGINT), 9L) AS h31,
+        |  array(CAST(NULL AS BIGINT)) AS allnull,
+        |  CAST(array() AS ARRAY<BIGINT>) AS empty""".stripMargin)
+    for (df <- Seq(gen, folded)) {
+      val r = df.select(
+        hash("sh", ElementHash.Plain).as("k60"), expr(hofH60).as("f60"),
+        hash("sh", ElementHash.Wide64).as("k64"), expr(hofH64).as("f64"),
+        k(MinHashSignature(expression(col("h31")))).as("ks"), expr(hofSig).as("fs"),
+        k(MinHashSignature(expression(col("allnull")))).as("kn"),
+        k(MinHashSignature(expression(col("empty")))).as("ke")).head()
+      assert(r.get(0) == r.get(1) && r.getSeq[Any](0)(1) == null, s"$r")
+      assert(r.get(2) == r.get(3) && r.getSeq[Any](2)(1) == null, s"$r")
+      assert(r.get(4) == r.get(5) && !r.getSeq[Any](4).contains(null), s"$r")
+      assert(r.getSeq[Any](6) == Seq.fill(16)(null) && r.getSeq[Any](7) == Seq.fill(16)(null), s"$r")
+    }
+  }
+
   test("Tables.normalizeTs folds every fixture vintage to the same µs timestamps") {
     // every events consumer (batch + streaming) routes through this
     // helper; the driver fixtures have switched physical type once

@@ -1,9 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression,
+  HigherOrderFunction, Literal, StringSplit}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.expressions.WordShingles
 import graft.operators.{Ann, Knn, Similarity, TextOps}
 
 /** Physical-plan audits: the scale contracts the operators claim are
@@ -40,6 +47,53 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("65535"), s"band mask is not 16-bit:\n$p")
     assert(!p.contains("& 31)") && !p.contains("& 63)"),
       "narrow band masks crept back into the declared plan")
+  }
+
+  /** Every expression of an optimized plan, including the physical
+    * plans of its cached relations (`InMemoryRelation`'s inner child,
+    * and under it an adaptive plan's input, which is not a tree child). */
+  private def allExpressions(p: QueryPlan[_]): Seq[Expression] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case _ => p.children ++ p.innerChildren
+    }
+    p.expressions ++ inner.flatMap {
+      case q: QueryPlan[_] => allExpressions(q)
+      case _ => Nil
+    }
+  }
+
+  test("text dedup chain: shingles, hashes and signatures are kernels, not lambdas") {
+    // the re-split hazard: a size(sh) > 0 filter above the shingle
+    // projection is pushed down with `toks` substituted, so an
+    // interpreted shingle lambda re-ran split(text) ~3x per shingle
+    // inside the Filter. With the kernels no lambda sees the shingle
+    // array or split(); the ONE HOF allowed is minhash's 4-element
+    // band-key transform over sequence(0, 3) (and the cast lambda
+    // nested in it).
+    def isBandKey(h: HigherOrderFunction): Boolean = h match {
+      // sequence(0, 3) is constant-folded to a literal array
+      case ArrayTransform(Literal(a: ArrayData, ArrayType(IntegerType, _)), _) =>
+        a.toIntArray().toSeq == Seq(0, 1, 2, 3)
+      case _ => false
+    }
+    val queries = Seq(
+      "minhash_lsh_dedup" -> TextOps.minhashLshDedup(spark, d),
+      "simhash64_neardup" -> TextOps.simhash64NearDup(spark, d),
+      "simhash_neardup" -> TextOps.simhashNearDup(spark, d),
+      "doc_fingerprint" -> TextOps.docFingerprint(spark, d),
+      "repetition_stats" -> TextOps.repetitionStats(spark, d))
+    queries.foreach { case (name, df) =>
+      val exprs = allExpressions(df.queryExecution.optimizedPlan)
+      val hofs = exprs.flatMap(_.collect { case h: HigherOrderFunction => h })
+      val allowed = hofs.filter(isBandKey)
+        .flatMap(_.collect { case h: HigherOrderFunction => h })
+      val stray = hofs.filterNot(h => allowed.exists(_ eq h))
+      assert(stray.isEmpty, s"$name plans an interpreted lambda:\n${stray.mkString("\n")}")
+      val splitInLambda = hofs.flatMap(_.functions).exists(_.exists(_.isInstanceOf[StringSplit]))
+      assert(!splitInLambda, s"$name splits text inside a lambda")
+      assert(exprs.exists(_.exists(_.isInstanceOf[WordShingles])), s"$name lost the shingle kernel")
+    }
   }
 
   test("langid_trigram: the doc x language grid is broadcast, not cartesian") {
