@@ -85,27 +85,74 @@ object Ann {
                  w: Double = DefaultKeyW): DataFrame =
     bucketsRaw(s, d, nProj, w).orderBy(col("vec_id"), col("proj_id"))
 
+  /** The serving skeleton every approximate search arm ends in: the
+    * reference's own query tail (`search`, `src/hnsw.zig:194-236`:
+    * score the candidates by squared L2, keep the top k by (dist, id))
+    * as two stages, so an arm states only its candidate generator.
+    *
+    *   - [[exactRerank]]: lsh, ivf/ivfk, bq, pq and ivfpq generate a
+    *     `(query_id, vec_id)` candidate set; the true corpus vectors
+    *     and the broadcast query vectors are attached, scored by exact
+    *     squared-L2, and the top k kept. The returned `dist` is exact
+    *     whatever approximate score chose the candidates — the
+    *     standard two-stage shape: a shortlist, exact verification,
+    *     then the top-k merge (Jégou, Douze & Schmid, TPAMI 2011 §V).
+    *   - [[topK]]: sq8 (whose `dist` is the reconstructed-vector
+    *     distance), graph, hnsw/hnswa and filtered (whose walks score
+    *     exactly as they go) rank their pool directly.
+    *
+    * The oracle SQL states the same two stages once each
+    * ([[topKSql]], [[exactRerankSql]]).
+    *
+    * This helper keeps the `n` best rows of `pool` per query by (dist,
+    * vec_id), ranked 1..n in `rnk`. A pool that already carries `rn`
+    * (the hierarchical walk's final beam round, ranked over the same
+    * order) is filtered on it instead: row_number over the same window
+    * assigns the same ranks, and reuse skips one exchange+sort+window
+    * pass over the pool. */
+  private def topK(pool: DataFrame, n: Int): DataFrame =
+    if (pool.columns.contains("rn"))
+      pool.filter(col("rn") <= n).withColumnRenamed("rn", "rnk")
+    else
+      pool.withColumn("rnk", row_number().over(
+          Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))))
+        .filter(col("rnk") <= n)
+
+  /** The query vectors `(query_id, qv)`: the corpus rows vec_id < nq. */
+  private def queryVecs(e: DataFrame, nq: Int): DataFrame =
+    e.filter(col("vec_id") < nq)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+
+  /** Exact re-rank of a `(query_id, vec_id)` candidate set into the
+    * [[topK]]: the true corpus vectors join by id, the query vectors
+    * broadcast, squared-L2 scores each pair. `bounded` marks a
+    * shortlist whose size is fixed by construction (≤ shortlist·nq
+    * rows: bq, pq, ivfpq): it broadcasts against the corpus scan, so
+    * the fetch is map-only and never a second corpus-wide distance
+    * pass. Candidate sets that grow with the corpus (lsh's bucket
+    * collisions, ivf's probed cells) join without a hint. */
+  private def exactRerank(e: DataFrame, cands: DataFrame, nq: Int, k: Int,
+                          bounded: Boolean): DataFrame = {
+    val c = cands.select(col("query_id"), col("vec_id"))
+    topK(e.select(col("vec_id"), col("embedding"))
+      .join(if (bounded) broadcast(c) else c, Seq("vec_id"))
+      .join(broadcast(queryVecs(e, nq)), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        squaredL2(col("embedding"), col("qv")).as("dist")), k)
+  }
+
   /** LSH-accelerated approximate k-NN for queries (vec_id < nq):
     * candidates = corpus vectors sharing ≥1 (proj, bucket) key with the
-    * query, then exact re-rank among candidates. The equi-join on
-    * bucket keys is the 100 TB path: no cross join anywhere. The
-    * bucket table feeds both join sides, so it is cached once. */
+    * query. The equi-join on bucket keys is the 100 TB path: no cross
+    * join anywhere. The bucket table feeds both join sides, so it is
+    * cached once. */
   private[graft] def annLshRaw(s: SparkSession, d: String, nq: Int = 10, k: Int = 10): DataFrame = {
-    val e = Tables.embeddings(s, d)
     val b = bucketsRaw(s, d, nProj = DefaultNProj, w = DefaultKeyW).cache()
     val qb = b.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("proj_id"), col("bucket"))
     val cand = qb.join(b, Seq("proj_id", "bucket"))
       .select(col("query_id"), col("vec_id")).distinct()
-    val withVecs = cand
-      .join(e.select(col("vec_id").as("query_id"), col("embedding").as("qv")), "query_id")
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    withVecs
-      .select(col("query_id"), col("vec_id"),
-        squaredL2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    exactRerank(Tables.embeddings(s, d), cand, nq, k, bounded = false)
   }
 
   def annLsh(s: SparkSession, d: String, nq: Int = 10, k: Int = 10): DataFrame =
@@ -171,30 +218,27 @@ object Ann {
   def ivfAssign(s: SparkSession, d: String): DataFrame =
     ivfAssignRaw(s, d).orderBy(col("vec_id"))
 
-  /** IVF approximate k-NN: probe the `nprobe` nearest cells per query,
-    * exact re-rank within them. Scan cost drops from |corpus| to
-    * |probed cells| — the standard inverted-file trade. */
-  private def annIvfWith(e: DataFrame, cent: DataFrame,
-                         nq: Int, k: Int, nprobe: Int): DataFrame = {
-    val assign = ivfAssignWith(e, cent).select(col("vec_id"), col("cell"))
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    // nprobe nearest cells per query
-    val wq = Window.partitionBy("query_id").orderBy(col("cdist"), col("clabel"))
-    val probed = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("clabel"),
+  /** The `nprobe` nearest coarse cells per query by (cdist, cell) —
+    * the IVF cell probe of [[annIvfWith]] and [[annIvfPqRaw]]. The
+    * query and centroid vectors ride along for ivfpq's query residual. */
+  private def probeCells(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
+    val wq = Window.partitionBy("query_id").orderBy(col("cdist"), col("cell"))
+    q.crossJoin(broadcast(cent))
+      .select(col("query_id"), col("qv"), col("clabel").as("cell"), col("cvec"),
         squaredL2(col("qv"), col("cvec")).as("cdist"))
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("clabel").as("cell"))
-    // candidates = corpus vectors in probed cells
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    probed.join(assign, "cell")
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("query_id"), col("vec_id"),
-        squaredL2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+  }
+
+  /** IVF approximate k-NN: candidates = the corpus vectors of the
+    * `nprobe` nearest cells per query. Scan cost drops from |corpus|
+    * to |probed cells| — the standard inverted-file trade. */
+  private def annIvfWith(e: DataFrame, cent: DataFrame,
+                         nq: Int, k: Int, nprobe: Int): DataFrame = {
+    val assign = ivfAssignWith(e, cent).select(col("vec_id"), col("cell"))
+    val probed = probeCells(queryVecs(e, nq), cent, nprobe)
+      .select(col("query_id"), col("cell"))
+    exactRerank(e, probed.join(assign, "cell"), nq, k, bounded = false)
   }
 
   private[graft] def annIvfRaw(s: SparkSession, d: String,
@@ -209,9 +253,9 @@ object Ann {
     * fixpoint from the label seed) instead of the raw label centroids —
     * the production IVF lifecycle, where the coarse quantizer is
     * trained before the inverted file is built. Identical plan shape
-    * to [[annIvf]] (broadcast codebook, cell equi-join, exact
-    * re-rank); only the codebook differs, so cells are tighter and the
-    * same nprobe recovers more true neighbors. */
+    * to [[annIvf]] (broadcast codebook, cell equi-join); only the
+    * codebook differs, so cells are tighter and the same nprobe
+    * recovers more true neighbors. */
   private[graft] def annIvfTrainedRaw(s: SparkSession, d: String,
       nq: Int = 10, k: Int = 10, nprobe: Int = 3, iters: Int = 3): DataFrame =
     annIvfWith(Tables.embeddings(s, d),
@@ -2177,15 +2221,13 @@ object Ann {
     val edges = ensureFullIndexVec(s, d, 16).filter(col("level") === 0)
       .select(col("src"), col("dst"), col("dv"))
       .cache()
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val q = queryVecs(e, nq)
     // seed: 1-row entry, pushed-down point lookup, broadcast against
     // the nq queries — the nested-loop join this plans as has a 1-row
     // build side, the optimal physical shape for pairing every query
     // with one constant row (PlanSpec pins that the build side is
     // always the broadcast side)
     val entry = e.filter(col("vec_id") === 0L).select(col("embedding").as("ev"))
-    val wBeam = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
     var pool = cp(q.crossJoin(broadcast(entry))
       .select(col("query_id"), lit(0L).as("vec_id"),
         squaredL2(col("qv"), col("ev")).as("dist"), col("qv")))
@@ -2199,19 +2241,14 @@ object Ann {
           col("query_id"), col("vec_id").as("src"), col("qv"))), "src")
         .select(col("query_id"), col("dst").as("vec_id"),
           squaredL2(col("dv"), col("qv")).as("dist"), col("qv"))
-      pool = cp(pool.unionByName(scored)
+      pool = cp(topK(pool.unionByName(scored)
         .groupBy(col("query_id"), col("vec_id"))
         // qv is constant per query_id, so first() is value-deterministic
-        .agg(min(col("dist")).as("dist"), first(col("qv")).as("qv"))
-        .withColumn("rn", row_number().over(wBeam))
-        .filter(col("rn") <= beam)
-        .drop("rn"))
+        .agg(min(col("dist")).as("dist"), first(col("qv")).as("qv")), beam)
+        .drop("rnk"))
       r += 1
     }
-    pool
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
-      .drop("qv")
+    topK(pool, k).drop("qv")
   }
 
   def annGraphSearch(
@@ -2508,8 +2545,7 @@ object Ann {
     // pool is ≤ beam·nq rows), so scoring needs NO query join either:
     // each round is edges ⋈ broadcast(frontier) — one broadcast, one
     // tiny argmin shuffle, down from three broadcasts + two joins
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val q = queryVecs(e, nq)
     var cur: DataFrame = null
     var visited: List[DataFrame] = Nil
     upper match {
@@ -2666,35 +2702,19 @@ object Ann {
         .select(col("query_id"), col("sv.vec_id").as("vec_id"),
           col("sv.dist").as("dist"), col("qv"), (col("p") + 1).as("rn"))
       // the FINAL round keeps its rank column: it carries the same
-      // 1..beam ranks the top-k epilogue's window would recompute, so
-      // callers can filter rn ≤ k directly and skip one
-      // exchange+sort+window pass over the pool
+      // 1..beam ranks [[topK]]'s window would recompute, so the top-k
+      // filters rn ≤ k directly
       pool = cp(if (r == rounds - 1) ranked else ranked.drop("rn"))
       r += 1
     }
     (pool, visited.reverse)
   }
 
-  /** Shared top-k epilogue of the exact and approximate hierarchical
-    * searches: reuse the final beam round's rank when present
-    * (row_number over the same window+order assigns the same 1..beam
-    * ranks), filter to k, present as `rnk` — ONE definition so the
-    * rank-reuse contract cannot drift between the two arms. */
-  private def searchEpilogue(pool: DataFrame, k: Int): DataFrame = {
-    val w1 = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    val ranked =
-      if (pool.columns.contains("rn")) pool
-      else pool.withColumn("rn", row_number().over(w1))
-    ranked.filter(col("rn") <= k)
-      .withColumnRenamed("rn", "rnk")
-      .drop("qv")
-  }
-
   private[operators] def hnswSearchRaw(
       s: SparkSession, d: String,
       nq: Int = 10, k: Int = 10, beam: Int = 16, rounds: Int = 3,
       m: Int = 16, truncateLineage: Boolean = true): DataFrame =
-    searchEpilogue(hnswWalk(s, d, nq, beam, rounds, m, truncateLineage)._1, k)
+    topK(hnswWalk(s, d, nq, beam, rounds, m, truncateLineage)._1, k).drop("qv")
 
   def hnswSearch(
       s: SparkSession, d: String,
@@ -2720,8 +2740,8 @@ object Ann {
       s: SparkSession, d: String,
       nq: Int = 10, k: Int = 10, beam: Int = 16, rounds: Int = 3,
       m: Int = 16, truncateLineage: Boolean = true): DataFrame =
-    searchEpilogue(hnswWalk(s, d, nq, beam, rounds, m, truncateLineage,
-      approxIndex = true)._1, k)
+    topK(hnswWalk(s, d, nq, beam, rounds, m, truncateLineage,
+      approxIndex = true)._1, k).drop("qv")
 
   def hnswSearchApprox(
       s: SparkSession, d: String,
@@ -2762,12 +2782,9 @@ object Ann {
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("dist")).as("dist"))
     val lbl = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val w1 = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    lbl.join(broadcast(vis), "vec_id")
+    topK(lbl.join(broadcast(vis), "vec_id")
       .filter(col("label") % 2 === 0)
-      .select(col("query_id"), col("vec_id"), col("dist"))
-      .withColumn("rnk", row_number().over(w1))
-      .filter(col("rnk") <= k)
+      .select(col("query_id"), col("vec_id"), col("dist")), k)
   }
 
   def hnswSearchFiltered(
@@ -2841,14 +2858,9 @@ object Ann {
            |            * (element_at(dmax_a, i) - element_at(dmin_a, i))
            |            + element_at(dmin_a, i) END)""".stripMargin))
       .select(col("vec_id"), col("rv"))
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    rec.crossJoin(broadcast(q))
+    topK(rec.crossJoin(broadcast(queryVecs(e, nq)))
       .select(col("query_id"), col("vec_id"),
-        squaredL2(col("rv"), col("qv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        squaredL2(col("rv"), col("qv")).as("dist")), k)
   }
 
   def annSq8(s: SparkSession, d: String, nq: Int = 10, k: Int = 10): DataFrame =
@@ -2873,42 +2885,31 @@ object Ann {
   }
 
   /** Binary-quantized search: Hamming pre-ranking over the packed sign
-    * bits selects `cand` candidates per query, exact re-rank recovers
-    * the final top-k — the standard two-stage BQ serving shape (the
-    * first stage touches 16 bytes/vector, the second only
-    * `cand` full vectors). The fixture-scale candidate generation is
-    * a code-only broadcast cross join (3 longs per corpus row); at
-    * index scale the first stage becomes a multi-index banded
-    * equi-join over code chunks — the [[TextOps.simhashNearDup]] plan
-    * shape, pigeonhole over bands. */
+    * bits selects [[BqShortlist]] candidates per query, and
+    * [[exactRerank]] recovers the final top-k — the standard two-stage
+    * BQ serving shape (the first stage touches 16 bytes/vector, the
+    * second only the shortlist's full vectors). The fixture-scale
+    * candidate generation is a code-only broadcast cross join (3 longs
+    * per corpus row); at index scale the first stage becomes a
+    * multi-index banded equi-join over code chunks — the
+    * [[TextOps.simhashNearDup]] plan shape, pigeonhole over bands. */
   private[graft] def annBqRaw(s: SparkSession, d: String,
-            nq: Int = 10, k: Int = 10, cand: Int = 50): DataFrame = {
-    val e = Tables.embeddings(s, d)
+            nq: Int = 10, k: Int = 10): DataFrame = {
     val c = bqCodes(s, d)
     val qc = c.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("b0").as("qb0"), col("b1").as("qb1"))
-    val wHam = Window.partitionBy("query_id").orderBy(col("ham"), col("vec_id"))
-    val candidates = c.crossJoin(broadcast(qc))
+    // the Hamming distance ranks the shortlist in the `dist` slot
+    val ham = c.crossJoin(broadcast(qc))
       .select(col("query_id"), col("vec_id"),
-        (expr("bit_count(b0 ^ qb0)") + expr("bit_count(b1 ^ qb1)")).as("ham"))
-      .withColumn("hrnk", row_number().over(wHam))
-      .filter(col("hrnk") <= cand)
-      .select(col("query_id"), col("vec_id"))
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    candidates
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        squaredL2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        (expr("bit_count(b0 ^ qb0)") + expr("bit_count(b1 ^ qb1)")).as("dist"))
+    exactRerank(Tables.embeddings(s, d), topK(ham, BqShortlist), nq, k, bounded = true)
   }
 
-  def annBq(s: SparkSession, d: String,
-            nq: Int = 10, k: Int = 10, cand: Int = 50): DataFrame =
-    annBqRaw(s, d, nq, k, cand).orderBy(col("query_id"), col("rnk"))
+  def annBq(s: SparkSession, d: String, nq: Int = 10, k: Int = 10): DataFrame =
+    annBqRaw(s, d, nq, k).orderBy(col("query_id"), col("rnk"))
+
+  /** Hamming shortlist size per query of [[annBq]]. */
+  private val BqShortlist = 50
 
   private val PqSubs = 8   // subspaces (64 dims / 8)
   private val PqSubDim = 8 // dims per subspace
@@ -2983,55 +2984,24 @@ object Ann {
   def pqCodes(s: SparkSession, d: String): DataFrame =
     pqCodesRaw(s, d).orderBy(col("vec_id"), col("sub"))
 
-  /** Candidate-pool factor of the PQ arms' exact re-rank stage: ADC
-    * ranks top-(PqRerankWiden·k) candidates, exact squared-L2 re-ranks
-    * them to k. 4 mirrors [[DiversityWiden]]'s measured shape: the r13
-    * `ServingRecall` table graded re-rank-free ADC at 0.20/0.19 recall
-    * at sf10 (uniformly poor — VERDICT r13 "What's wrong" #2), and the
-    * standard two-stage PQ serving shape (Jégou, Douze & Schmid, TPAMI
-    * 2011 §V — ADC shortlist, exact verification) is the fix: the
-    * re-rank touches PqRerankWiden·k·nq full vectors per batch, a
-    * fetch-by-id the engine states as a broadcast semi-scan, never a
-    * second corpus-wide distance pass. */
-  private[operators] val PqRerankWiden = 4
+  /** Shortlist factor of the PQ arms: ADC ranks the top
+    * (PqRerankWiden·k) candidates per query and [[exactRerank]]
+    * verifies them to k. Re-rank-free ADC graded 0.20/0.19 recall for
+    * pq/ivfpq at sf10 (SCALING_SF10.md §7.5); the exact verification
+    * of the standard two-stage PQ serving shape (Jégou, Douze & Schmid,
+    * TPAMI 2011 §V) is the fix. 4 mirrors [[DiversityWiden]]. */
+  private val PqRerankWiden = 4
 
-  /** Exact re-rank stage shared by [[annPqRaw]] and [[annIvfPqRaw]]:
-    * `cands(query_id, vec_id)` is the ADC shortlist (≤ widen·k rows per
-    * query); attach the TRUE corpus vectors (broadcast the query-sized
-    * shortlist against the corpus scan — map-only, only shortlist rows
-    * survive), attach the broadcast query vectors, score exact
-    * squared-L2, keep the bounded top-k window. The returned `dist` is
-    * the EXACT distance — what a PQ store's user actually receives
-    * after verification, and what makes the arm's recall a property of
-    * shortlist coverage rather than code resolution. */
-  private def pqExactRerank(e: DataFrame, cands: DataFrame,
-                            nq: Int, k: Int): DataFrame = {
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    e.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cands.select(col("query_id"), col("vec_id"))), Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        squaredL2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
-  /** PQ approximate k-NN via asymmetric distance computation (ADC)
-    * with exact re-rank: per query, a 8×16 lookup table of exact
-    * subspace distances to every codeword; per corpus vector, adc ≈
-    * Σ_s LUT[s][code_s] — a strict left fold over the flattened LUT,
-    * so bit-deterministic and oracle-checkable. The ADC scan keeps a
-    * top-([[PqRerankWiden]]·k) shortlist per query, and
-    * [[pqExactRerank]] verifies it with true distances — the standard
-    * two-stage PQ serving shape. The corpus is touched only through
-    * its 8-byte code rows plus the shortlist fetch; the LUT is
-    * query-sized and broadcasts; both stages are map-only + bounded
-    * top-k. */
+  /** PQ approximate k-NN via asymmetric distance computation (ADC):
+    * per query, a 8×16 lookup table of exact subspace distances to
+    * every codeword; per corpus vector, adc ≈ Σ_s LUT[s][code_s] — a
+    * strict left fold over the flattened LUT, so bit-deterministic and
+    * oracle-checkable. The ADC scan yields the [[PqRerankWiden]]·k
+    * shortlist per query. The corpus is touched only through its
+    * 8-byte code rows plus the shortlist fetch; the LUT is query-sized
+    * and broadcasts; both stages are map-only + bounded top-k. */
   private[graft] def annPqRaw(s: SparkSession, d: String, nq: Int = 10,
-                              k: Int = 10, cand: Int = 0): DataFrame = {
-    val shortlistK = if (cand > 0) cand else PqRerankWiden * k
+                              k: Int = 10): DataFrame = {
     val e = Tables.embeddings(s, d)
     val cb = pqCodebook(s, d)
     // codes array straight from the codegen'd per-row encoder — the
@@ -3056,16 +3026,13 @@ object Ann {
       .agg(transform(
         array_sort(collect_list(struct(col("sub"), col("code"), col("ld")))),
         x => x.getField("ld")).as("lut"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
     // codegen'd ADC fold ([[AdcDist]]) — this is the per-(corpus row ×
     // query) hot loop of the scan, previously an interpreted
     // `aggregate(sequence(...))` lambda with boxed element_at reads
-    val shortlist = codes.crossJoin(broadcast(lut))
+    val adc = codes.crossJoin(broadcast(lut))
       .withColumn("dist", adcDist(col("codes"), col("lut"), PqK))
       .select(col("query_id"), col("vec_id"), col("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= shortlistK)
-    pqExactRerank(e, shortlist, nq, k)
+    exactRerank(e, topK(adc, PqRerankWiden * k), nq, k, bounded = true)
   }
 
   def annPq(s: SparkSession, d: String, nq: Int = 10, k: Int = 10): DataFrame =
@@ -3090,11 +3057,10 @@ object Ann {
     * broadcast-assign), once to scan codes in probed cells (cell
     * equi-join against the query-sized probe list — |probed cells|
     * rows, not |corpus|); centroids, codebook, and the nq·nprobe·128
-    * LUT rows broadcast; top-k is the usual bounded window. */
+    * LUT rows broadcast; the ADC shortlist ends in [[exactRerank]]. */
   private[graft] def annIvfPqRaw(
       s: SparkSession, d: String,
-      nq: Int = 10, k: Int = 10, nprobe: Int = 3, cand: Int = 0): DataFrame = {
-    val shortlistK = if (cand > 0) cand else PqRerankWiden * k
+      nq: Int = 10, k: Int = 10, nprobe: Int = 3): DataFrame = {
     val e = Tables.embeddings(s, d)
     val cent = Similarity.centroids(s, d)
     val cellVec = cent.select(col("clabel").as("cell"), col("cvec"))
@@ -3121,14 +3087,7 @@ object Ann {
       .select(col("vec_id"), col("cell"),
         pqEncode(col("rv"), col("cbarr"), PqSubs, PqSubDim).as("codes"))
     // nprobe nearest cells per query, query residual per probed cell
-    val q = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val wq = Window.partitionBy("query_id").orderBy(col("cdist"), col("cell"))
-    val probed = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("clabel").as("cell"), col("cvec"),
-        squaredL2(col("qv"), col("cvec")).as("cdist"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
+    val probed = probeCells(queryVecs(e, nq), cent, nprobe)
       .select(col("query_id"), col("cell"),
         zip_with(col("qv"), col("cvec"), (a, b) => a - b).as("qr"))
     // per-(query, cell) ADC LUT over the query residual
@@ -3145,17 +3104,12 @@ object Ann {
         array_sort(collect_list(struct(col("sub"), col("code"), col("ld")))),
         x => x.getField("ld")).as("lut"))
     // ADC scan restricted to probed cells: cell equi-join, then the
-    // strict-left-fold LUT sum — map-only over the candidate rows;
-    // the top-(PqRerankWiden·k) shortlist is then verified with exact
-    // distances (the faiss IVFPQ re-rank stage — see [[pqExactRerank]])
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    // codegen'd ADC fold ([[AdcDist]]) — see [[annPqRaw]]'s note
-    val shortlist = codes.join(broadcast(lut), Seq("cell"))
+    // codegen'd strict-left-fold LUT sum ([[AdcDist]]) — map-only over
+    // the candidate rows; its shortlist is verified like [[annPqRaw]]'s
+    val adc = codes.join(broadcast(lut), Seq("cell"))
       .withColumn("dist", adcDist(col("codes"), col("lut"), PqK))
       .select(col("query_id"), col("vec_id"), col("dist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= shortlistK)
-    pqExactRerank(e, shortlist, nq, k)
+    exactRerank(e, topK(adc, PqRerankWiden * k), nq, k, bounded = true)
   }
 
   def annIvfPq(s: SparkSession, d: String,
@@ -3216,6 +3170,25 @@ object Ann {
   private[operators] val RecallArms: Seq[String] =
     Seq("bq", "graph", "hnsw", "hnswa", "ivf", "ivfk", "ivfpq", "lsh", "pq", "sq8")
 
+  /** Every approximate serving arm's UNSORTED internal form, named as
+    * in [[RecallArms]]: `(query_id, vec_id, dist, rnk)` per arm. */
+  private[graft] def servingArms(s: SparkSession, d: String,
+                                 nq: Int, k: Int): Seq[(String, DataFrame)] = {
+    val arms = Seq(
+      "bq"    -> annBqRaw(s, d, nq, k),
+      "graph" -> annGraphSearchRaw(s, d, nq, k),
+      "hnsw"  -> hnswSearchRaw(s, d, nq, k),
+      "hnswa" -> hnswSearchApproxRaw(s, d, nq, k),
+      "ivf"   -> annIvfRaw(s, d, nq, k),
+      "ivfk"  -> annIvfTrainedRaw(s, d, nq, k),
+      "ivfpq" -> annIvfPqRaw(s, d, nq, k),
+      "lsh"   -> annLshRaw(s, d, nq, k),
+      "pq"    -> annPqRaw(s, d, nq, k),
+      "sq8"   -> annSq8Raw(s, d, nq, k))
+    require(arms.map(_._1) == RecallArms, "arm list drifted from RecallArms")
+    arms
+  }
+
   /** Recall@k self-evaluation — the measurement every ANN deployment
     * ships next to its index: per (arm, query), |approx ∩ exact| / k,
     * for EVERY approximate serving arm (bq, graph, hnsw, hnswa, ivf,
@@ -3232,19 +3205,7 @@ object Ann {
     val e = Tables.embeddings(s, d)
     val exact = graft.plans.KnnJoin.exact(e, e.filter(col("vec_id") < nq), k)
       .select(col("query_id"), col("vec_id"))
-    val arms: Seq[(String, DataFrame)] = Seq(
-      "bq"    -> annBqRaw(s, d, nq, k),
-      "graph" -> annGraphSearchRaw(s, d, nq, k),
-      "hnsw"  -> hnswSearchRaw(s, d, nq, k),
-      "hnswa" -> hnswSearchApproxRaw(s, d, nq, k),
-      "ivf"   -> annIvfRaw(s, d, nq, k),
-      "ivfk"  -> annIvfTrainedRaw(s, d, nq, k),
-      "ivfpq" -> annIvfPqRaw(s, d, nq, k),
-      "lsh"   -> annLshRaw(s, d, nq, k),
-      "pq"    -> annPqRaw(s, d, nq, k),
-      "sq8"   -> annSq8Raw(s, d, nq, k))
-    require(arms.map(_._1) == RecallArms, "arm list drifted from RecallArms")
-    val approx = arms.map { case (n, df) =>
+    val approx = servingArms(s, d, nq, k).map { case (n, df) =>
       df.select(lit(n).as("arm"), col("query_id"), col("vec_id"))
     }.reduce(_ unionByName _)
     val hits = approx.join(exact, Seq("query_id", "vec_id"))
@@ -3294,6 +3255,132 @@ object Ann {
   private def duckUnit(key: String) =
     s"((${duckHash60.format(key)} % 1000001) / 1000000.0 - 0.5)"
   private val duckSq = "list_sum(list_transform(list_zip(%s, %s), p -> (p[1]-p[2])*(p[1]-p[2])))"
+
+  /** The oracle's corpus: `e(vec_id, v)` with DOUBLE elements. */
+  private val corpusCte =
+    "e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)"
+
+  /** SQL twin of [[levelExpr]]: `h(vec_id, hv)` and `lv(vec_id, level)`.
+    * Not MATERIALIZED: DuckDB 1.0.0 fails a query that binds a
+    * materialized CTE's name again in a nested WITH ("Duplicate
+    * alias"), and the `index_stats` oracle nests an edges oracle under
+    * its own `h`/`lv`. */
+  private val levelCtes =
+    s"""h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
+       |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
+       |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h)""".stripMargin
+
+  /** [[levelCtes]] plus the levelled corpus `e(vec_id, label, v,
+    * level)`, restricted to `corpusWhere` over `embeddings em`. */
+  private def levelCorpusCtes(corpusWhere: String = "TRUE"): String =
+    s"""$levelCtes,
+       |e AS MATERIALIZED (SELECT em.vec_id, em.label, list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS v, lv.level
+       |      FROM embeddings em JOIN lv ON lv.vec_id = em.vec_id
+       |      WHERE $corpusWhere)""".stripMargin
+
+  /** SQL twin of [[topK]]: the `n` best rows of `src(query_id, vec_id,
+    * dist)` per query by (dist, vec_id), ranked 1..n in `rnk`. */
+  private def topKSql(src: String, n: Int): String =
+    s"""SELECT query_id, vec_id, dist, rnk FROM (
+       |  SELECT query_id, vec_id, dist,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk
+       |  FROM $src) WHERE rnk <= $n""".stripMargin
+
+  /** A serving arm's final statement: [[topKSql]] to k, in output order. */
+  private def resultSql(src: String, k: Int): String =
+    s"${topKSql(src, k)} ORDER BY query_id, rnk"
+
+  /** SQL twin of [[exactRerank]]: the candidate CTE `cands(query_id,
+    * vec_id)` scored by exact squared-L2 against the enclosing corpus
+    * `e(vec_id, v)`, ending the statement with [[resultSql]]. */
+  private def exactRerankSql(cands: String, k: Int): String =
+    s"""rr AS (SELECT c.query_id, c.vec_id, ${duckSq.format("ev.v", "qe.v")} AS dist
+       |       FROM $cands c JOIN e ev ON ev.vec_id = c.vec_id JOIN e qe ON qe.vec_id = c.query_id)
+       |${resultSql("rr", k)}""".stripMargin
+
+  /** SQL twin of [[bucketsRaw]] at 8 projections, w = 0.1:
+    * `pb(vec_id, proj_id, bucket)` over the enclosing `e(vec_id, v)`. */
+  private val lshBucketCte =
+    s"""pb AS (SELECT vec_id, p AS proj_id,
+       |  CAST(floor(list_sum(list_transform(generate_series(1, 64),
+       |    j -> v[j] * ${duckUnit("concat(CAST(p AS STRING), '-', CAST(j - 1 AS STRING))")})) / 0.1) AS BIGINT) AS bucket
+       |  FROM e, (SELECT unnest(generate_series(0, 7)) AS p))""".stripMargin
+
+  /** SQL twin of [[ivfAssignWith]] over the codebook CTE `cent(clabel,
+    * cvec)`: `asg(vec_id, cell, cdist)`, nearest cell by (cdist, cell). */
+  private def ivfAssignCte(cent: String): String =
+    s"""asg AS (SELECT vec_id, cell, cdist FROM (
+       |  SELECT vec_id, cell, cdist,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY cdist, cell) AS rn
+       |  FROM (SELECT e.vec_id, c.clabel AS cell, ${duckSq.format("e.v", "c.cvec")} AS cdist
+       |        FROM e, $cent c)) WHERE rn = 1)""".stripMargin
+
+  /** SQL twin of [[probeCells]] for the 10 oracle queries at nprobe 3:
+    * `probed(query_id, cell, qr)`, `qr` the query residual. */
+  private def probeCte(cent: String): String =
+    s"""probed AS MATERIALIZED (SELECT query_id, cell, qr FROM (
+       |  SELECT q.vec_id AS query_id, c.clabel AS cell,
+       |    list_transform(list_zip(q.v, c.cvec), p -> p[1] - p[2]) AS qr,
+       |    row_number() OVER (PARTITION BY q.vec_id
+       |      ORDER BY ${duckSq.format("q.v", "c.cvec")}, c.clabel) AS rn
+       |  FROM e q, $cent c WHERE q.vec_id < 10) WHERE rn <= 3)""".stripMargin
+
+  /** The [[annIvf]] oracle over the codebook `cent` that `ctes` (a
+    * `WITH` list also defining `e`) ends in. */
+  private def ivfOracle(ctes: String, cent: String): String =
+    s"""$ctes,
+       |${ivfAssignCte(cent)},
+       |${probeCte(cent)},
+       |cand AS (SELECT p.query_id, a.vec_id FROM probed p JOIN asg a ON a.cell = p.cell),
+       |${exactRerankSql("cand", 10)}""".stripMargin
+
+  /** SQL twin of [[bqCodes]]: `c(vec_id, b0, b1)` over `e(vec_id, v)`. */
+  private val bqCodesCte =
+    """c AS (SELECT vec_id,
+      |  list_reduce(list_transform(generate_series(1, 32),
+      |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
+      |    (a, b) -> a*2 + b) AS b0,
+      |  list_reduce(list_transform(generate_series(33, 64),
+      |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
+      |    (a, b) -> a*2 + b) AS b1
+      |  FROM e)""".stripMargin
+
+  /** SQL twin of the PQ encoder over `src(vec_id, [cell,] vec)`: the
+    * sampled codebook `cb(sub, code, cw)` (slices of vec_id < 16), the
+    * per-subspace argmin by (subdistance, code) `qz`, and the code
+    * arrays `codes(vec_id, [cell,] codes)`. */
+  private def pqCtes(src: String, vec: String, cell: Boolean): String = {
+    val kc = if (cell) ", cell" else ""
+    s"""ss AS (SELECT unnest(range(8)) AS sub),
+       |cb AS MATERIALIZED (SELECT sub, CAST(vec_id AS INT) AS code,
+       |         list_slice($vec, sub*8+1, sub*8+8) AS cw FROM $src, ss WHERE vec_id < 16),
+       |qz AS (SELECT vec_id$kc, sub, code FROM (
+       |         SELECT sv.vec_id$kc, sv.sub, cb.code,
+       |           row_number() OVER (PARTITION BY sv.vec_id, sv.sub
+       |             ORDER BY ${duckSq.format("sv.sv", "cb.cw")}, cb.code) AS rn
+       |         FROM (SELECT vec_id$kc, sub, list_slice($vec, sub*8+1, sub*8+8) AS sv
+       |               FROM $src, ss) sv JOIN cb USING (sub)) WHERE rn = 1),
+       |codes AS (SELECT vec_id$kc, list(code ORDER BY sub) AS codes FROM qz GROUP BY vec_id$kc)""".stripMargin
+  }
+
+  /** SQL twin of the ADC scan: per-(query[, cell]) lookup tables over
+    * the query slices of `qsrc(query_id, [cell,] qvec)`, and the
+    * strict-left-fold [[graft.functions.expressions.AdcDist]] sum
+    * `ad(query_id, vec_id, dist)` over [[pqCtes]]' `codes`, restricted
+    * to each LUT's cell when `cell`, ranked to the [[PqRerankWiden]]·10
+    * shortlist `sl`. */
+  private def adcShortlistCtes(qsrc: String, qvec: String, cell: Boolean): String = {
+    val kc = if (cell) ", cell" else ""
+    s"""qsv AS (SELECT query_id$kc, sub, list_slice($qvec, sub*8+1, sub*8+8) AS qsv FROM $qsrc, ss),
+       |ldt AS (SELECT query_id$kc, sub, code, ${duckSq.format("qsv", "cw")} AS ld
+       |        FROM qsv JOIN cb USING (sub)),
+       |lut AS (SELECT query_id$kc, list(ld ORDER BY sub, code) AS lut FROM ldt GROUP BY query_id$kc),
+       |ad AS (SELECT l.query_id, c.vec_id,
+       |         list_sum(list_transform(range(1, 9),
+       |           s -> l.lut[(s-1)*16 + c.codes[s] + 1])) AS dist
+       |       FROM codes c JOIN lut l ON ${if (cell) "l.cell = c.cell" else "TRUE"}),
+       |sl AS (${topKSql("ad", PqRerankWiden * 10)})""".stripMargin
+  }
 
   /** The diversity selection as a CTE chain — the oracle restatement
     * of [[graft.functions.expressions.DiversitySelect]]'s greedy scan,
@@ -3356,13 +3443,7 @@ object Ann {
   private def hnswEdgesOracle(m: Int, maxLevel: Int,
                               corpusWhere: String = "TRUE"): String = {
     val wm = DiversityWiden * m
-    val header =
-      s"""WITH RECURSIVE h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-         |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
-         |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h),
-         |e AS MATERIALIZED (SELECT em.vec_id, list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS v, lv.level
-         |      FROM embeddings em JOIN lv ON lv.vec_id = em.vec_id
-         |      WHERE $corpusWhere)""".stripMargin
+    val header = s"WITH RECURSIVE ${levelCorpusCtes(corpusWhere)}"
     val perLevel = (0 to maxLevel).map { l =>
       s"""d$l AS (SELECT a.vec_id AS src, b.vec_id AS dst, ${duckSq.format("a.v", "b.v")} AS dist
          |        FROM e a JOIN e b ON a.vec_id <> b.vec_id
@@ -3389,13 +3470,7 @@ object Ann {
     * counts are identical and the cheaper plain chain counts them). */
   private def hnswEdgesPlainOracle(m: Int, maxLevel: Int,
                                    corpusWhere: String = "TRUE"): String = {
-    val header =
-      s"""WITH h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-         |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
-         |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h),
-         |e AS (SELECT em.vec_id, list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS v, lv.level
-         |      FROM embeddings em JOIN lv ON lv.vec_id = em.vec_id
-         |      WHERE $corpusWhere)""".stripMargin
+    val header = s"WITH ${levelCorpusCtes(corpusWhere)}"
     val perLevel = (0 to maxLevel).map { l =>
       s"""d$l AS (SELECT a.vec_id AS src, b.vec_id AS dst, ${duckSq.format("a.v", "b.v")} AS dist
          |        FROM e a JOIN e b ON a.vec_id <> b.vec_id
@@ -3569,11 +3644,7 @@ object Ann {
   private def hnswEdgesApproxOracle(m: Int, maxLevel: Int,
                                     nProj: Int, probe: Int,
                                     cap: Int = 1024, refine: Int = 2): String =
-    s"""WITH RECURSIVE h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-       |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
-       |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h),
-       |e AS MATERIALIZED (SELECT em.vec_id, list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS v, lv.level
-       |      FROM embeddings em JOIN lv ON lv.vec_id = em.vec_id),
+    s"""WITH RECURSIVE ${levelCorpusCtes()},
        |${approxEdgeChain(m, maxLevel, nProj, probe, cap, refine)},
        |${diversityCtes(m, s"ae$refine")}
        |SELECT level, src, dst, dist,
@@ -3592,7 +3663,7 @@ object Ann {
     // top-(DiversityWiden·m) — one level, tagged 0 for the shared chain
     val wm = DiversityWiden * m
     val header =
-      s"""WITH RECURSIVE e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH RECURSIVE $corpusCte,
          |dp AS (SELECT l.vec_id AS src, r.vec_id AS dst, ${duckSq.format("l.v", "r.v")} AS dist
          |       FROM e l, e r WHERE l.vec_id <> r.vec_id),
          |wcw AS MATERIALIZED (SELECT 0 AS level, src, dst, dist FROM (
@@ -3610,16 +3681,9 @@ object Ann {
          |       FROM p${r - 1} p JOIN g ON g.src = p.vec_id
          |         JOIN e ed ON ed.vec_id = g.dst JOIN q ON q.query_id = p.query_id),
          |u$r AS (SELECT query_id, vec_id, min(dist) AS dist FROM c$r GROUP BY 1, 2),
-         |p$r AS (SELECT query_id, vec_id, dist FROM (
-         |        SELECT query_id, vec_id, dist,
-         |          row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-         |        FROM u$r) WHERE rn <= $beam)""".stripMargin
+         |p$r AS (${topKSql(s"u$r", beam)})""".stripMargin
     }
-    s"$header,\n${roundsSql.mkString(",\n")}\n" +
-      s"""SELECT query_id, vec_id, dist, rnk FROM (
-         |  SELECT query_id, vec_id, dist,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk
-         |  FROM p$rounds) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+    s"$header,\n${roundsSql.mkString(",\n")}\n${resultSql(s"p$rounds", k)}"
   }
 
   /** Unrolled oracle for [[hnswSearch]] — the per-level graphs are
@@ -3639,12 +3703,7 @@ object Ann {
     // each time — at 30+ references that exhausts the fd limit (and
     // recomputes every O(n²) d_l join per reference). MATERIALIZED
     // evaluates each hot CTE once.
-    val header =
-      s"""WITH RECURSIVE h AS MATERIALIZED (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-         |lv AS MATERIALIZED (SELECT vec_id, least(31, CAST(len(regexp_extract(
-         |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h),
-         |e AS MATERIALIZED (SELECT em.vec_id, em.label, list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS v, lv.level
-         |      FROM embeddings em JOIN lv ON lv.vec_id = em.vec_id)""".stripMargin
+    val header = s"WITH RECURSIVE ${levelCorpusCtes()}"
     // g_l: per-level DIVERSITY-SELECTED adjacency (the declared serving
     // graph) — wide candidates from the exact O(n²) per-level
     // self-joins, or (approxGraph) from the SAME capped multiprobe
@@ -3690,10 +3749,7 @@ object Ann {
          |       SELECT p.query_id, g.dst AS vec_id, ${duckSq.format("ed.v", "q.qv")} AS dist
          |       FROM c${l + 1} p JOIN g$l g ON g.src = p.vec_id
          |         JOIN e ed ON ed.vec_id = g.dst JOIN q ON q.query_id = p.query_id),
-         |c$l AS (SELECT query_id, vec_id, dist FROM (
-         |        SELECT query_id, vec_id, dist,
-         |          row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-         |        FROM x$l) WHERE rn = 1)""".stripMargin
+         |c$l AS (${topKSql(s"x$l", 1)})""".stripMargin
     }
     val beamRounds = (1 to rounds).map { r =>
       val prev = if (r == 1) "c1" else s"p${r - 1}"
@@ -3703,17 +3759,10 @@ object Ann {
          |       FROM $prev p JOIN g0 g ON g.src = p.vec_id
          |         JOIN e ed ON ed.vec_id = g.dst JOIN q ON q.query_id = p.query_id),
          |u$r AS (SELECT query_id, vec_id, min(dist) AS dist FROM b$r GROUP BY 1, 2),
-         |p$r AS (SELECT query_id, vec_id, dist FROM (
-         |        SELECT query_id, vec_id, dist,
-         |          row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-         |        FROM u$r) WHERE rn <= $beam)""".stripMargin
+         |p$r AS (${topKSql(s"u$r", beam)})""".stripMargin
     }
     val finalSel =
-      if (!filteredEven)
-        s"""SELECT query_id, vec_id, dist, rnk FROM (
-           |  SELECT query_id, vec_id, dist,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk
-           |  FROM p$rounds) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+      if (!filteredEven) resultSql(s"p$rounds", k)
       else {
         // visited set: the seed is inside x_maxLevel; every descent
         // expansion is inside its x_l; every beam expansion inside its
@@ -3722,12 +3771,10 @@ object Ann {
           (maxLevel to 1 by -1).map(l => s"SELECT query_id, vec_id, dist FROM x$l") ++
             (1 to rounds).map(r => s"SELECT query_id, vec_id, dist FROM b$r")
         s"""vis AS (SELECT query_id, vec_id, min(dist) AS dist FROM (
-           |  ${parts.mkString(" UNION ALL ")}) GROUP BY 1, 2)
-           |SELECT query_id, vec_id, dist, rnk FROM (
-           |  SELECT v.query_id, v.vec_id, v.dist,
-           |    row_number() OVER (PARTITION BY v.query_id ORDER BY v.dist, v.vec_id) AS rnk
-           |  FROM vis v JOIN e ON e.vec_id = v.vec_id
-           |  WHERE e.label % 2 = 0) WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+           |  ${parts.mkString(" UNION ALL ")}) GROUP BY 1, 2),
+           |fvis AS (SELECT v.query_id, v.vec_id, v.dist FROM vis v JOIN e ON e.vec_id = v.vec_id
+           |  WHERE e.label % 2 = 0)
+           |${resultSql("fvis", k)}""".stripMargin
       }
     s"$header,\n${perLevel.mkString(",\n")},\n$seed,\n" +
       s"${descent.mkString(",\n")},\n${beamRounds.mkString(",\n")}" +
@@ -3757,9 +3804,7 @@ object Ann {
     // per-layer panel: participating nodes from the levels projection,
     // edges aggregated over the (nested-WITH) edges oracle
     "index_stats" ->
-      s"""WITH h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-         |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
-         |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h),
+      s"""WITH $levelCtes,
          |part AS (SELECT unnest(generate_series(0, least(level, 8))) AS layer FROM lv),
          |pn AS (SELECT layer, count(*) AS n_nodes FROM part GROUP BY layer),
          |eg AS (SELECT level AS layer, count(*) AS n_edges
@@ -3784,33 +3829,19 @@ object Ann {
          |ORDER BY pn.layer""".stripMargin,
     "ann_graph_search" -> graphSearchOracle(nq = 10, k = 10, beam = 16, rounds = 4, m = 16),
     "lsh_buckets" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |pb AS (SELECT vec_id, p AS proj_id,
-         |  CAST(floor(list_sum(list_transform(generate_series(1, 64),
-         |    j -> v[j] * ${duckUnit("concat(CAST(p AS STRING), '-', CAST(j - 1 AS STRING))")})) / 0.1) AS BIGINT) AS bucket
-         |  FROM e, (SELECT unnest(generate_series(0, 7)) AS p))
+      s"""WITH $corpusCte,
+         |$lshBucketCte
          |SELECT vec_id, proj_id, bucket FROM pb ORDER BY vec_id, proj_id""".stripMargin,
     "ann_lsh" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |pb AS (SELECT vec_id, p AS proj_id,
-         |  CAST(floor(list_sum(list_transform(generate_series(1, 64),
-         |    j -> v[j] * ${duckUnit("concat(CAST(p AS STRING), '-', CAST(j - 1 AS STRING))")})) / 0.1) AS BIGINT) AS bucket
-         |  FROM e, (SELECT unnest(generate_series(0, 7)) AS p)),
+      s"""WITH $corpusCte,
+         |$lshBucketCte,
          |cand AS (SELECT DISTINCT q.vec_id AS query_id, b.vec_id
          |         FROM pb q JOIN pb b ON q.proj_id = b.proj_id AND q.bucket = b.bucket
          |         WHERE q.vec_id < 10),
-         |dd AS (SELECT c.query_id, c.vec_id, ${duckSq.format("ev.v", "qv.v")} AS dist
-         |       FROM cand c JOIN e ev ON ev.vec_id = c.vec_id JOIN e qv ON qv.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dd)
-         |SELECT query_id, vec_id, dist, rnk FROM r WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin,
+         |${exactRerankSql("cand", 10)}""".stripMargin,
     "neardup_lsh" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |pb AS (SELECT vec_id, p AS proj_id,
-         |  CAST(floor(list_sum(list_transform(generate_series(1, 64),
-         |    j -> v[j] * ${duckUnit("concat(CAST(p AS STRING), '-', CAST(j - 1 AS STRING))")})) / 0.1) AS BIGINT) AS bucket
-         |  FROM e, (SELECT unnest(generate_series(0, 7)) AS p)),
+      s"""WITH $corpusCte,
+         |$lshBucketCte,
          |cand AS (SELECT DISTINCT l.vec_id AS src, r.vec_id AS dst
          |         FROM pb l JOIN pb r ON l.proj_id = r.proj_id AND l.bucket = r.bucket
          |           AND l.vec_id < r.vec_id)
@@ -3818,102 +3849,30 @@ object Ann {
          |FROM cand c JOIN e ea ON ea.vec_id = c.src JOIN e eb ON eb.vec_id = c.dst
          |WHERE ${duckSq.format("ea.v", "eb.v")} < 1.1
          |ORDER BY src, dst""".stripMargin,
+    // kmeansCtes(0) is the label-centroid codebook cent0 (and corpus e)
     "ivf_assign" ->
-      s"""WITH ex AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-         |                   CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings),
-         |cm AS (SELECT label AS clabel, pos,
-         |              CAST(sum(CAST(round(val, 6) AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS cv
-         |       FROM ex GROUP BY label, pos),
-         |cent AS (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm GROUP BY clabel),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |dd AS (SELECT e.vec_id, c.clabel, ${duckSq.format("e.v", "c.cvec")} AS cdist FROM e, cent c),
-         |r AS (SELECT vec_id, clabel, cdist,
-         |        row_number() OVER (PARTITION BY vec_id ORDER BY cdist, clabel) AS rn FROM dd)
-         |SELECT vec_id, clabel AS cell, cdist FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    "ann_ivf" ->
-      s"""WITH ex AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-         |                   CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings),
-         |cm AS (SELECT label AS clabel, pos,
-         |              CAST(sum(CAST(round(val, 6) AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS cv
-         |       FROM ex GROUP BY label, pos),
-         |cent AS (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm GROUP BY clabel),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |asg AS (SELECT vec_id, cell FROM (
-         |          SELECT e.vec_id, c.clabel AS cell,
-         |            row_number() OVER (PARTITION BY e.vec_id ORDER BY ${duckSq.format("e.v", "c.cvec")}, c.clabel) AS rn
-         |          FROM e, cent c) WHERE rn = 1),
-         |probed AS (SELECT query_id, cell FROM (
-         |             SELECT q.vec_id AS query_id, c.clabel AS cell,
-         |               row_number() OVER (PARTITION BY q.vec_id ORDER BY ${duckSq.format("q.v", "c.cvec")}, c.clabel) AS rn
-         |             FROM e q, cent c WHERE q.vec_id < 10) WHERE rn <= 3),
-         |cand AS (SELECT p.query_id, a.vec_id FROM probed p JOIN asg a ON a.cell = p.cell),
-         |dd AS (SELECT c.query_id, c.vec_id, ${duckSq.format("ev.v", "qv.v")} AS dist
-         |       FROM cand c JOIN e ev ON ev.vec_id = c.vec_id JOIN e qv ON qv.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dd)
-         |SELECT query_id, vec_id, dist, rnk FROM r WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin,
-    // the kmeans_iter oracle's full unrolled CTE chain (ending in the
-    // cent3 trained codebook), then the ann_ivf oracle's cell-probe
-    // logic verbatim against cent3
-    "ann_ivf_trained" ->
-      s"""${Similarity.kmeansCtes(3)},
-         |asg AS (SELECT vec_id, cell FROM (
-         |          SELECT e.vec_id, c.clabel AS cell,
-         |            row_number() OVER (PARTITION BY e.vec_id ORDER BY ${duckSq.format("e.v", "c.cvec")}, c.clabel) AS rn
-         |          FROM e, cent3 c) WHERE rn = 1),
-         |probed AS (SELECT query_id, cell FROM (
-         |             SELECT q.vec_id AS query_id, c.clabel AS cell,
-         |               row_number() OVER (PARTITION BY q.vec_id ORDER BY ${duckSq.format("q.v", "c.cvec")}, c.clabel) AS rn
-         |             FROM e q, cent3 c WHERE q.vec_id < 10) WHERE rn <= 3),
-         |cand AS (SELECT p.query_id, a.vec_id FROM probed p JOIN asg a ON a.cell = p.cell),
-         |dd AS (SELECT c.query_id, c.vec_id, ${duckSq.format("ev.v", "qv.v")} AS dist
-         |       FROM cand c JOIN e ev ON ev.vec_id = c.vec_id JOIN e qv ON qv.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dd)
-         |SELECT query_id, vec_id, dist, rnk FROM r WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin,
+      s"""${Similarity.kmeansCtes(0)},
+         |${ivfAssignCte("cent0")}
+         |SELECT vec_id, cell, cdist FROM asg ORDER BY vec_id""".stripMargin,
+    "ann_ivf" -> ivfOracle(Similarity.kmeansCtes(0), "cent0"),
+    // the kmeans_iter oracle's unrolled chain ends in the trained cent3
+    "ann_ivf_trained" -> ivfOracle(Similarity.kmeansCtes(3), "cent3"),
     "hnsw_levels" ->
-      s"""WITH h AS (SELECT vec_id, ${duckHash60.format("CAST(vec_id AS STRING)")} AS hv FROM embeddings),
-         |lv AS (SELECT vec_id, least(31, CAST(len(regexp_extract(
-         |         reverse(bin(hv)), '^0*')) AS INT)) AS level FROM h)
+      s"""WITH $levelCtes
          |SELECT vec_id, level FROM lv ORDER BY vec_id""".stripMargin,
     "bq_codes" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
-        |SELECT vec_id,
-        |  list_reduce(list_transform(generate_series(1, 32),
-        |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
-        |    (a, b) -> a*2 + b) AS b0,
-        |  list_reduce(list_transform(generate_series(33, 64),
-        |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
-        |    (a, b) -> a*2 + b) AS b1
-        |FROM e ORDER BY vec_id""".stripMargin,
+      s"""WITH $corpusCte,
+         |$bqCodesCte
+         |SELECT vec_id, b0, b1 FROM c ORDER BY vec_id""".stripMargin,
     "ann_bq" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |c AS (SELECT vec_id,
-         |  list_reduce(list_transform(generate_series(1, 32),
-         |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
-         |    (a, b) -> a*2 + b) AS b0,
-         |  list_reduce(list_transform(generate_series(33, 64),
-         |    i -> CASE WHEN v[i] > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END),
-         |    (a, b) -> a*2 + b) AS b1
-         |  FROM e),
+      s"""WITH $corpusCte,
+         |$bqCodesCte,
          |qc AS (SELECT vec_id AS query_id, b0 AS qb0, b1 AS qb1 FROM c WHERE vec_id < 10),
          |ham AS (SELECT qc.query_id, c.vec_id,
-         |          bit_count(xor(c.b0, qc.qb0)) + bit_count(xor(c.b1, qc.qb1)) AS ham
+         |          bit_count(xor(c.b0, qc.qb0)) + bit_count(xor(c.b1, qc.qb1)) AS dist
          |        FROM c, qc),
-         |cand AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY ham, vec_id) AS hrnk
-         |  FROM ham) WHERE hrnk <= 50),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |dd AS (SELECT cand.query_id, cand.vec_id, ${duckSq.format("ev.v", "q.qv")} AS dist
-         |       FROM cand JOIN e ev ON ev.vec_id = cand.vec_id
-         |       JOIN q ON q.query_id = cand.query_id),
-         |r AS (SELECT query_id, vec_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dd)
-         |SELECT query_id, vec_id, dist, rnk FROM r WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin,
+         |cand AS (${topKSql("ham", BqShortlist)}),
+         |${exactRerankSql("cand", 10)}""".stripMargin,
     // pos is 0-based in the engine (posexplode); generate_subscripts
     // is 1-based, hence the pos - 1 on output
     "sq8_codes" ->
@@ -3924,8 +3883,10 @@ object Ann {
         |  CASE WHEN dmax = dmin THEN 0
         |       ELSE least(255, greatest(0, CAST(round((val - dmin)/(dmax - dmin)*255, 0) AS INT))) END AS code
         |FROM ex JOIN dims USING (pos) ORDER BY vec_id, pos""".stripMargin,
+    // dist is the RECONSTRUCTED-vector distance: sq8 ranks its own
+    // scores, with no exact re-rank
     "ann_sq8" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $corpusCte,
          |ex AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
          |       CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings),
          |dims AS (SELECT pos, min(val) AS dmin, max(val) AS dmax FROM ex GROUP BY pos),
@@ -3940,111 +3901,30 @@ object Ann {
          |               ELSE codes[i] / 255.0 * (dmax_a[i] - dmin_a[i]) + dmin_a[i] END) AS rv
          |        FROM codes, da),
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |dd AS (SELECT q.query_id, rec.vec_id, ${duckSq.format("rec.rv", "q.qv")} AS dist FROM rec, q),
-         |r AS (SELECT query_id, vec_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dd)
-         |SELECT query_id, vec_id, dist, rnk FROM r WHERE rnk <= 10
-         |ORDER BY query_id, rnk""".stripMargin,
+         |dd AS (SELECT q.query_id, rec.vec_id, ${duckSq.format("rec.rv", "q.qv")} AS dist FROM rec, q)
+         |${resultSql("dd", 10)}""".stripMargin,
     "pq_codes" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |ss AS (SELECT unnest(range(8)) AS sub),
-         |cb AS (SELECT sub, CAST(vec_id AS INT) AS code,
-         |         list_slice(v, sub*8+1, sub*8+8) AS cw FROM e, ss WHERE vec_id < 16),
-         |sv AS (SELECT vec_id, sub, list_slice(v, sub*8+1, sub*8+8) AS sv FROM e, ss),
-         |dd AS (SELECT sv.vec_id, sv.sub, cb.code, ${duckSq.format("sv.sv", "cb.cw")} AS cd
-         |       FROM sv JOIN cb USING (sub))
-         |SELECT vec_id, CAST(sub AS INT) AS sub, code FROM (
-         |  SELECT vec_id, sub, code,
-         |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY cd, code) AS rn FROM dd)
-         |WHERE rn = 1 ORDER BY vec_id, sub""".stripMargin,
+      s"""WITH $corpusCte,
+         |${pqCtes("e", "v", cell = false)}
+         |SELECT vec_id, CAST(sub AS INT) AS sub, code FROM qz ORDER BY vec_id, sub""".stripMargin,
     "ann_pq" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |ss AS (SELECT unnest(range(8)) AS sub),
-         |cb AS (SELECT sub, CAST(vec_id AS INT) AS code,
-         |         list_slice(v, sub*8+1, sub*8+8) AS cw FROM e, ss WHERE vec_id < 16),
-         |sv AS (SELECT vec_id, sub, list_slice(v, sub*8+1, sub*8+8) AS sv FROM e, ss),
-         |qz AS (SELECT vec_id, sub, code FROM (
-         |         SELECT sv.vec_id, sv.sub, cb.code,
-         |           row_number() OVER (PARTITION BY sv.vec_id, sv.sub
-         |             ORDER BY ${duckSq.format("sv.sv", "cb.cw")}, cb.code) AS rn
-         |         FROM sv JOIN cb USING (sub)) WHERE rn = 1),
-         |codes AS (SELECT vec_id, list(code ORDER BY sub) AS codes FROM qz GROUP BY vec_id),
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 10),
-         |qsv AS (SELECT query_id, sub, list_slice(v, sub*8+1, sub*8+8) AS qsv FROM q, ss),
-         |ldt AS (SELECT query_id, sub, code, ${duckSq.format("qsv", "cw")} AS ld
-         |        FROM qsv JOIN cb USING (sub)),
-         |lut AS (SELECT query_id, list(ld ORDER BY sub, code) AS lut FROM ldt GROUP BY query_id),
-         |ad AS (SELECT l.query_id, c.vec_id,
-         |         list_sum(list_transform(range(1, 9),
-         |           s -> l.lut[(s-1)*16 + c.codes[s] + 1])) AS dist
-         |       FROM codes c, lut l),
-         |sl AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM ad)
-         |WHERE rnk <= 40),
-         |rr AS (SELECT s.query_id, s.vec_id, ${duckSq.format("ev.v", "q.v")} AS dist
-         |       FROM sl s JOIN e ev ON ev.vec_id = s.vec_id
-         |       JOIN q ON q.query_id = s.query_id)
-         |SELECT query_id, vec_id, dist, rnk FROM (
-         |  SELECT query_id, vec_id, dist,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM rr)
-         |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
-    // IVF-PQ: the ivf_assign centroid/assign CTEs, residuals, the
-    // ann_pq machinery re-pointed at residual slices, per-(query,
-    // probed cell) residual LUTs, cell-restricted ADC scan, exact
-    // re-rank of the top-40 ADC shortlist (the engine's pqExactRerank)
+      s"""WITH $corpusCte,
+         |${pqCtes("e", "v", cell = false)},
+         |${adcShortlistCtes("(SELECT vec_id AS query_id, v FROM e WHERE vec_id < 10) q", "v", cell = false)},
+         |${exactRerankSql("sl", 10)}""".stripMargin,
+    // IVF-PQ: the ivf assignment, residuals, the ann_pq machinery
+    // re-pointed at residual slices, per-(query, probed cell) residual
+    // LUTs, a cell-restricted ADC scan, then the exact re-rank
     "ann_ivfpq" ->
-      s"""WITH ex AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-         |                   CAST(unnest(embedding) AS DOUBLE) AS val FROM embeddings),
-         |cm AS (SELECT label AS clabel, pos,
-         |              CAST(sum(CAST(round(val, 6) AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS cv
-         |       FROM ex GROUP BY label, pos),
-         |cent AS MATERIALIZED (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm GROUP BY clabel),
-         |e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |asg AS (SELECT vec_id, cell FROM (
-         |          SELECT e.vec_id, c.clabel AS cell,
-         |            row_number() OVER (PARTITION BY e.vec_id ORDER BY ${duckSq.format("e.v", "c.cvec")}, c.clabel) AS rn
-         |          FROM e, cent c) WHERE rn = 1),
+      s"""${Similarity.kmeansCtes(0)},
+         |${ivfAssignCte("cent0")},
          |rv AS MATERIALIZED (SELECT a.vec_id, a.cell,
          |         list_transform(list_zip(e.v, c.cvec), p -> p[1] - p[2]) AS rv
-         |       FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN cent c ON c.clabel = a.cell),
-         |ss AS (SELECT unnest(range(8)) AS sub),
-         |cb AS MATERIALIZED (SELECT sub, CAST(vec_id AS INT) AS code,
-         |         list_slice(rv, sub*8+1, sub*8+8) AS cw FROM rv, ss WHERE vec_id < 16),
-         |qz AS (SELECT vec_id, cell, sub, code FROM (
-         |         SELECT sv.vec_id, sv.cell, sv.sub, cb.code,
-         |           row_number() OVER (PARTITION BY sv.vec_id, sv.sub
-         |             ORDER BY ${duckSq.format("sv.sv", "cb.cw")}, cb.code) AS rn
-         |         FROM (SELECT vec_id, cell, sub, list_slice(rv, sub*8+1, sub*8+8) AS sv
-         |               FROM rv, ss) sv JOIN cb USING (sub)) WHERE rn = 1),
-         |codes AS (SELECT vec_id, cell, list(code ORDER BY sub) AS codes FROM qz GROUP BY vec_id, cell),
-         |q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 10),
-         |probed AS MATERIALIZED (SELECT query_id, cell, qr FROM (
-         |           SELECT q.query_id, c.clabel AS cell,
-         |             list_transform(list_zip(q.v, c.cvec), p -> p[1] - p[2]) AS qr,
-         |             row_number() OVER (PARTITION BY q.query_id
-         |               ORDER BY ${duckSq.format("q.v", "c.cvec")}, c.clabel) AS rn
-         |           FROM q, cent c) WHERE rn <= 3),
-         |qsv AS (SELECT query_id, cell, sub, list_slice(qr, sub*8+1, sub*8+8) AS qsv FROM probed, ss),
-         |ldt AS (SELECT query_id, cell, sub, code, ${duckSq.format("qsv", "cw")} AS ld
-         |        FROM qsv JOIN cb USING (sub)),
-         |lut AS (SELECT query_id, cell, list(ld ORDER BY sub, code) AS lut
-         |        FROM ldt GROUP BY query_id, cell),
-         |ad AS (SELECT l.query_id, c.vec_id,
-         |         list_sum(list_transform(range(1, 9),
-         |           s -> l.lut[(s-1)*16 + c.codes[s] + 1])) AS dist
-         |       FROM codes c JOIN lut l ON l.cell = c.cell),
-         |sl AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM ad)
-         |WHERE rnk <= 40),
-         |rr AS (SELECT s.query_id, s.vec_id, ${duckSq.format("ev.v", "q.v")} AS dist
-         |       FROM sl s JOIN e ev ON ev.vec_id = s.vec_id
-         |       JOIN q ON q.query_id = s.query_id)
-         |SELECT query_id, vec_id, dist, rnk FROM (
-         |  SELECT query_id, vec_id, dist,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM rr)
-         |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+         |       FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN cent0 c ON c.clabel = a.cell),
+         |${pqCtes("rv", "rv", cell = true)},
+         |${probeCte("cent0")},
+         |${adcShortlistCtes("probed", "qr", cell = true)},
+         |${exactRerankSql("sl", 10)}""".stripMargin,
   )
 
   /** [[mmrRerank]]'s oracle: the greedy recurrence unrolled — round 1
@@ -4057,19 +3937,14 @@ object Ann {
     // re-opens the parquet each time — the unroll exhausts the fd
     // limit (the hnswSearchOracle precedent)
     val header =
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $corpusCte,
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nq),
          |dq AS (SELECT q.query_id, e.vec_id, ${duckSq.format("e.v", "q.qv")} AS dist FROM e, q),
-         |base AS MATERIALIZED (SELECT query_id, vec_id, dist FROM (
-         |    SELECT query_id, vec_id, dist,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rnk FROM dq)
-         |  WHERE rnk <= $cand),
+         |base AS MATERIALIZED (${topKSql("dq", cand)}),
          |pd AS MATERIALIZED (SELECT a.query_id, a.vec_id AS i, b.vec_id AS j, ${duckSq.format("ea.v", "eb.v")} AS pd
          |       FROM base a JOIN base b ON a.query_id = b.query_id AND a.vec_id <> b.vec_id
          |       JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id),
-         |s1 AS MATERIALIZED (SELECT query_id, vec_id, 1 AS rnk FROM (
-         |    SELECT query_id, vec_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn FROM base) WHERE rn = 1)""".stripMargin
+         |s1 AS MATERIALIZED (SELECT query_id, vec_id, 1 AS rnk FROM (${topKSql("base", 1)}))""".stripMargin
     val rounds = (2 to k).map { r =>
       s"""p$r AS (SELECT query_id, vec_id, $r AS rnk FROM (
          |    SELECT b.query_id, b.vec_id,

@@ -1183,7 +1183,8 @@ object Similarity {
     * output-identical (see the kmeansIter doc), so the oracle always
     * runs the full unroll. Ends with `cm$iters` (exploded stats) and
     * `cent$iters` (codebook) in scope; also reused verbatim by
-    * [[Ann]]'s trained-IVF oracle. */
+    * [[Ann]]'s IVF oracles (`iters = 0` leaves the label-centroid
+    * codebook `cent0`). */
   private[operators] def kmeansCtes(iters: Int): String = {
     val header =
       """WITH ex AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
@@ -1192,8 +1193,8 @@ object Similarity {
         |cm0 AS (SELECT label AS clabel, pos,
         |              CAST(sum(CAST(round(val, 6) AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS cv
         |       FROM ex GROUP BY label, pos),
-        |cent0 AS (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm0 GROUP BY clabel),
-        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)""".stripMargin
+        |cent0 AS MATERIALIZED (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm0 GROUP BY clabel),
+        |e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)""".stripMargin
     val rounds = (1 to iters).map { i =>
       s"""a$i AS (SELECT vec_id, clabel AS cluster FROM (
          |        SELECT e.vec_id, c.clabel,
@@ -1204,7 +1205,7 @@ object Similarity {
          |        FROM ex JOIN a$i ON a$i.vec_id = ex.vec_id GROUP BY 1, 2),
          |cent$i AS (SELECT clabel, list(cv ORDER BY pos) AS cvec FROM cm$i GROUP BY clabel)""".stripMargin
     }
-    s"$header,\n${rounds.mkString(",\n")}"
+    (header +: rounds).mkString(",\n")
   }
 
   private def kmeansIterOracle(iters: Int): String =

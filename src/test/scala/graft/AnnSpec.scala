@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Ann, BuildStore, HnswLevel, Knn, SessionConf}
+import graft.operators.{Ann, BlockKnnJoin, BuildStore, HnswLevel, Knn, SessionConf}
 
 /** Recall and structure tests for the approximate operators — the
   * engine's analogue of the reference's "Large Dataset" behavioral
@@ -931,6 +931,33 @@ class AnnSpec extends AnyFunSuite {
     assert(rec >= 0.3, f"IVF-PQ recall too low: $rec%.3f")
     val self = ivfpq.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     self.foreach { case (q, ids) => assert(ids.contains(q), s"query $q lost itself") }
+  }
+
+  test("serving arms share one result contract: ranks 1..n, (dist, vec_id) order, exact dist") {
+    val k = 10
+    val vec: Map[Long, Array[Double]] = Tables.embeddings(spark, d)
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    Ann.servingArms(spark, d, nq = 10, k = k).foreach { case (arm, df) =>
+      val rows = df.select("query_id", "vec_id", "dist", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      assert(rows.nonEmpty, s"$arm returned no rows")
+      rows.groupBy(_._1).foreach { case (q, rs) =>
+        val ranked = rs.sortBy(_._4)
+        assert(ranked.map(_._4).toSeq == (1 to ranked.length), s"$arm q=$q ranks not 1..n")
+        assert(ranked.length <= k, s"$arm q=$q returned ${ranked.length} > $k rows")
+        ranked.sliding(2).filter(_.length == 2).foreach { case Array(a, b) =>
+          assert(a._3 < b._3 || (a._3 == b._3 && a._2 < b._2),
+            s"$arm q=$q: (dist, vec_id) not strictly increasing at rnk ${b._4}")
+        }
+        // sq8's dist is the reconstructed-vector distance by design
+        if (arm != "sq8") ranked.foreach { case (_, v, dist, rnk) =>
+          val want = BlockKnnJoin.sqDist(vec(q), vec(v))
+          assert(java.lang.Double.doubleToLongBits(dist) == java.lang.Double.doubleToLongBits(want),
+            s"$arm q=$q rnk=$rnk: dist $dist is not the exact squared L2 $want")
+        }
+      }
+    }
   }
 
   test("hnsw_search_approx: full scale-path lifecycle holds recall vs exact k-NN") {
