@@ -78,25 +78,6 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // VERDICT r11 fix 1b: a dedup_stats driver red must carry its
-      // evidence — the choice that produced the written rows, and the
-      // state of the cross-session store the declared query is now
-      // guaranteed NOT to have read. Own guard: an evidence-side IO
-      // hiccup must never relabel a green query as failed.
-      if (name == "dedup_stats") {
-        try {
-          val p = graft.operators.Similarity.dedupChoicePath(sfDir)
-          System.err.println(
-            s"[verify] dedup_stats evidence: derived in-session " +
-              s"(declared query never reads cross-session storage); " +
-              s"choice=${graft.operators.Similarity.lastDedupChoice}; " +
-              s"store=$p storeExists=" +
-              graft.operators.BuildStore.published(p))
-        } catch { case e: Throwable =>
-          System.err.println(
-            s"[verify] dedup_stats evidence unavailable: ${e.getMessage}")
-        }
-      }
       freeLeakedState()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -7,8 +7,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one store for every persisted build artifact (the HNSW index
-  * layouts, the trained k-means codebook, the dedup chooser outcome),
-  * and the one key every build memo shares: a sampled digest of the
+  * layouts and the trained k-means codebook), and the one key every
+  * build memo shares (the dedup chooser's included): a sampled digest of the
   * fixture's `embeddings.parquet` bytes (the table every build reads),
   * a fingerprint of the engine's compiled code, the builder's tag and
   * its parameters. A regenerated fixture, a code change or another

@@ -439,49 +439,23 @@ object Similarity {
     } else (cur, levels)
   }
 
-  /** Measured pair recall of [[semanticCells]]'s Voronoi partition
-    * against a stride-sampled EXACT ε-join ground truth: the fraction
-    * of true ε-pairs (one endpoint in the sample) whose two endpoints
-    * land in the SAME cell — i.e. that [[semanticDedup]]'s intra-cell
-    * pair join can possibly see. The cells have the same structural
-    * blind spot the approximate index build paid to discover at sf100
-    * (a near-dup pair straddling a cell boundary is silently missed,
-    * and clone-structured fixtures cannot see it), so the quantity is
-    * MEASURED — pinned on the gated fixtures in AnnSpec, reported on
-    * the spread fixtures in SCALING_SF10.md. Sample-sized work: one
-    * broadcast-sample × corpus scan + a cell equi-join. Empty-pair
-    * corpora measure 1.0. */
-  private[graft] def semanticPairRecall(s: SparkSession, d: String,
-      eps: Double = 1.1, cellSize: Int = 64, stride: Long = 1L): Double = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+  /** The stride-sampled EXACT ε-pair set over `e` (vec_id, embedding):
+    * every pair (a < b) within ε that has an endpoint in the sample
+    * `vec_id % stride = 0`. Sample-sized work, one broadcast-sample ×
+    * corpus scan; materialized eagerly and caller-owned (free via
+    * [[Ann.freeBuildState]]). The ground truth of
+    * [[semanticPairRecallProbe]] and of the chooser's capture curve. */
+  private def sampledTruePairs(e: DataFrame, eps: Double,
+      stride: Long): DataFrame = {
     val sample = e.filter(col("vec_id") % stride === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val truePairs = e.crossJoin(broadcast(sample))
+    e.crossJoin(broadcast(sample))
       .filter(col("vec_id") =!= col("qid") &&
         squaredL2Within(col("embedding"), col("qv"), eps))
       .select(least(col("vec_id"), col("qid")).as("a"),
         greatest(col("vec_id"), col("qid")).as("b"))
       .distinct()
       .localCheckpoint(true)
-    try {
-      // keep the RAW handle: semanticCells returns caller-owned
-      // materialized state at L > 2, and freeBuildState needs the
-      // checkpoint's own frame — a .select on top would discard it
-      // and leak a corpus-sized block set per measurement
-      val cellsRaw = semanticCells(s, d, cellSize)
-      try {
-        val cells = cellsRaw.select(col("vec_id"), col("cell"))
-        val total = truePairs.count()
-        if (total == 0L) 1.0
-        else {
-          val ca = cells.select(col("vec_id").as("a"), col("cell").as("cell_a"))
-          val cb = cells.select(col("vec_id").as("b"), col("cell").as("cell_b"))
-          truePairs.join(ca, "a").join(cb, "b")
-            .filter(col("cell_a") === col("cell_b"))
-            .count().toDouble / total
-        }
-      } finally Ann.freeBuildState(cellsRaw)
-    } finally Ann.freeBuildState(truePairs)
   }
 
   def semanticDedup(s: SparkSession, d: String,
@@ -604,25 +578,26 @@ object Similarity {
     cur
   }
 
-  /** Measured pair recall of the multi-probe partition: the fraction of
-    * true ε-pairs the [[semanticDedupProbe]] join can see — i.e. with
-    * either endpoint's probe list (rnk ≤ p) reaching the other's HOME
-    * cell (rnk = 1), the exact capture condition of the probes×occupants
-    * join. Same sampled exact ground truth as [[semanticPairRecall]];
-    * p = 1 degenerates to it exactly. */
+  /** Measured pair recall of the multi-probe partition against a
+    * stride-sampled EXACT ε-join ground truth: the fraction of true
+    * ε-pairs (one endpoint in the sample) the [[semanticDedupProbe]]
+    * join can see — i.e. with either endpoint's probe list (rnk ≤ p)
+    * reaching the other's HOME cell (rnk = 1), the exact capture
+    * condition of the probes×occupants join. At p = 1 it is the pair
+    * recall of [[semanticCells]]'s Voronoi partition (the p = 1
+    * assignment is bit-identical), i.e. what [[semanticDedup]]'s
+    * intra-cell join can possibly see. The cells have the same
+    * structural blind spot the approximate index build paid to
+    * discover at sf100 (a near-dup pair straddling a cell boundary is
+    * silently missed, and clone-structured fixtures cannot see it), so
+    * the quantity is MEASURED — pinned on the gated fixtures in
+    * AnnSpec, reported on the spread fixtures in SCALING_SF10.md.
+    * Empty-pair corpora measure 1.0. */
   private[graft] def semanticPairRecallProbe(s: SparkSession, d: String,
       eps: Double = 1.1, cellSize: Int = 64, stride: Long = 1L,
       p: Int = 2): Double = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val sample = e.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val truePairs = e.crossJoin(broadcast(sample))
-      .filter(col("vec_id") =!= col("qid") &&
-        squaredL2Within(col("embedding"), col("qv"), eps))
-      .select(least(col("vec_id"), col("qid")).as("a"),
-        greatest(col("vec_id"), col("qid")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val truePairs = sampledTruePairs(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), eps, stride)
     // the probe build sits INSIDE the truePairs guard: a failure in
     // semanticCellsProbe must still free the already-materialized
     // truePairs checkpoint (the failure-path discipline of the r9
@@ -664,7 +639,7 @@ object Similarity {
 
   /** Keep-min-id verdicts of the probes×occupants candidate join — the
     * shared verdict tail of [[semanticDedupProbe]],
-    * [[semanticDedupMeasured]], and [[dedupStats]]' store-hit path.
+    * [[semanticDedupMeasured]], and [[dedupStats]]' memo-hit path.
     * `rnkCap` restricts the PROBE side to `rnk <= cap` (the measured
     * chooser ships a width below the assignment's build width);
     * occupants are always home-cell-only (rnk = 1). */
@@ -684,56 +659,35 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** Chooser outcome of the last [[semanticDedupMeasured]] call in this
-    * JVM — observability for specs and reports (the ANN BuildDiag
-    * treatment). `capturedAtP`/`massAtP` are keyed by ladder width. */
+  /** The outcome of one [[semanticDedupMeasured]] chooser run, returned
+    * by [[semanticDedupMeasuredWithState]] and reported as rows by
+    * [[dedupStats]]. `capturedAtP`/`massAtP` are keyed by ladder width. */
   final case class DedupChoice(p: Int, stride: Long, truePairs: Long,
       capturedAtP: Map[Int, Long], massAtP: Map[Int, BigInt],
       floorMet: Boolean)
-  @volatile private[graft] var lastDedupChoice: Option[DedupChoice] = None
 
   /** Count of LIVE chooser measurement runs in this JVM — spec
-    * observability for the persisted-choice lifecycle (a store-hit
-    * path must re-measure exactly 0 times). Atomic: += on a volatile
-    * is a lost-update race under the same-JVM concurrency the store
-    * publish path is hardened for. */
+    * observability for the memo (a memo hit must re-measure exactly 0
+    * times). Atomic: concurrent queries of one JVM all count. */
   private val chooserMeasurementCount = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def chooserMeasurements: Long = chooserMeasurementCount.get()
 
-  private val dedupChoiceSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("p",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("captured",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("mass",
-      DecimalType(38, 0), nullable = true),
-    org.apache.spark.sql.types.StructField("true_pairs",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("stride",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("chosen",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("floor_met",
-      org.apache.spark.sql.types.BooleanType, nullable = false)))
-
-  /** [[BuildStore]] location of the persisted chooser outcome for
-    * fixture `d` at the given knobs — keyed by the embeddings content,
-    * the engine code and EVERY chooser parameter, so a regenerated
-    * fixture, a code change, or a different knob can never serve a
-    * stale choice. */
-  private[graft] def dedupChoicePath(d: String, eps: Double = DefaultEps,
+  /** Memo key of the chooser outcome for fixture `d` at the given knobs
+    * — [[BuildStore.key]] over the embeddings content, the engine code
+    * and EVERY chooser parameter, so a regenerated fixture, a code
+    * change, or a different knob can never serve another's choice. */
+  private[graft] def chooserKey(d: String, eps: Double = DefaultEps,
       cellSize: Int = DefaultCellSize, pMax: Int = DefaultPMax,
       floorNum: Long = DefaultFloorNum,
       floorDen: Long = DefaultFloorDen, massPerRow: Long = DefaultMassPerRow,
       stride: Long = DefaultStride): String =
-    BuildStore.path(d, "dedupchoice", s"e$eps", s"c$cellSize", s"p$pMax",
+    BuildStore.key(d, "dedupchoice", s"e$eps", s"c$cellSize", s"p$pMax",
       s"f${floorNum}_$floorDen", s"m$massPerRow", s"s$stride")
 
   /** The declared-query chooser knobs, named ONCE: every path that
-    * must agree on them — the store key, the measurement defaults, the
-    * serving-side validation, and the dropped-count stage — reads
-    * these, so a future default change cannot silently diverge the
-    * memo/stored paths from the measured path. */
+    * must agree on them — the memo key, the measurement defaults and
+    * the dropped-count stage — reads these, so a future default change
+    * cannot silently diverge the memo path from the measured path. */
   private[graft] val DefaultEps = 1.1
   private[graft] val DefaultCellSize = 64
   private[graft] val DefaultPMax = 8
@@ -743,37 +697,14 @@ object Similarity {
   /** 0 = the engine's measured-bounded auto stride, max(1, n/2048). */
   private[graft] val DefaultStride = 0L
 
-  /** In-session memo of chooser outcomes, keyed by the full store key
+  /** In-session memo of chooser outcomes, keyed by [[chooserKey]]
     * (fixture content + code revision + knobs). A memo hit is PURE —
-    * same session, same code, same bytes ⇒ the measurement is
-    * deterministic — so the declared [[dedupStats]] may serve it while
-    * remaining a pure function of the fixture, unlike the cross-session
-    * parquet store (which only [[dedupStatsStored]] reads). */
+    * same code, same bytes ⇒ the measurement is deterministic — so the
+    * declared [[dedupStats]] may serve it while remaining a pure
+    * function of the fixture. Nothing is persisted across sessions. */
   private val chooserMemo =
     scala.collection.concurrent.TrieMap.empty[String, DedupChoice]
   private[graft] def clearChooserMemo(): Unit = chooserMemo.clear()
-
-  /** The chooser outcome as its stored rows, one per ladder width. */
-  private[graft] def choiceFrame(s: SparkSession, c: DedupChoice): DataFrame = {
-    val rows = c.capturedAtP.keys.toSeq.sorted.map { p =>
-      org.apache.spark.sql.Row(p, c.capturedAtP(p),
-        new java.math.BigDecimal(c.massAtP(p).bigInteger),
-        c.truePairs, c.stride, c.p, c.floorMet)
-    }
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), dedupChoiceSchema)
-  }
-
-  private[graft] def readDedupChoice(s: SparkSession, path: String): DedupChoice = {
-    val rows = s.read.parquet(path).collect()
-    DedupChoice(
-      p = rows.head.getInt(5),
-      stride = rows.head.getLong(4),
-      truePairs = rows.head.getLong(3),
-      capturedAtP = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap,
-      massAtP = rows.map(r => r.getInt(0) ->
-        BigInt(r.getDecimal(2).toBigInteger)).toMap,
-      floorMet = rows.head.getBoolean(6))
-  }
 
   /** [[semanticDedupProbe]] with the probe width MEASURED, not assumed —
     * the measured-knob treatment the approximate index build got in
@@ -808,7 +739,8 @@ object Similarity {
     * exceed [[semanticPairRecallProbe]](p); at p = pMax they agree).
     *
     * Returns (vec_id, dup_of) — the keep-min-id verdicts at the chosen
-    * width. The chooser outcome lands in [[lastDedupChoice]]. */
+    * width. [[semanticDedupMeasuredWithState]] also returns the chooser
+    * outcome. */
   def semanticDedupMeasured(s: SparkSession, d: String,
       eps: Double = DefaultEps, cellSize: Int = DefaultCellSize,
       pMax: Int = DefaultPMax, floorNum: Long = DefaultFloorNum,
@@ -820,13 +752,13 @@ object Similarity {
   /** [[semanticDedupMeasured]] plus a handle on the caller-owned
     * assignment state backing the verdict plan — so a caller that
     * CONSUMES the verdicts itself (e.g. [[dedupStats]]) can free the
-    * assignment instead of leaking it. */
+    * assignment instead of leaking it — and the chooser outcome. */
   private[graft] def semanticDedupMeasuredWithState(s: SparkSession,
       d: String, eps: Double = DefaultEps,
       cellSize: Int = DefaultCellSize, pMax: Int = DefaultPMax,
       floorNum: Long = DefaultFloorNum, floorDen: Long = DefaultFloorDen,
       massPerRow: Long = DefaultMassPerRow,
-      stride: Long = DefaultStride): (DataFrame, DataFrame) = {
+      stride: Long = DefaultStride): (DataFrame, DataFrame, DedupChoice) = {
     val ladder = Seq(1, 2, 4, 8).filter(_ <= pMax)
     require(ladder.nonEmpty && ladder.last == pMax,
       s"pMax must be a ladder width (1/2/4/8), got $pMax")
@@ -845,17 +777,7 @@ object Similarity {
     // `assign` is already materialized caller-owned state — a failure
     // here must free it (the r9 failure-path discipline; the try
     // below starts too late to see this stage)
-    val truePairs = try {
-      val sample = e.filter(col("vec_id") % strideEff === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      e.crossJoin(broadcast(sample))
-        .filter(col("vec_id") =!= col("qid") &&
-          squaredL2Within(col("embedding"), col("qv"), eps))
-        .select(least(col("vec_id"), col("qid")).as("a"),
-          greatest(col("vec_id"), col("qid")).as("b"))
-        .distinct()
-        .localCheckpoint(true)
-    } catch {
+    val truePairs = try sampledTruePairs(e, eps, strideEff) catch {
       case t: Throwable => Ann.freeBuildState(assign); throw t
     }
     chooserMeasurementCount.incrementAndGet()
@@ -917,19 +839,11 @@ object Similarity {
       // no caller to free it, so free it here
       case t: Throwable => Ann.freeBuildState(assign); throw t
     } finally Ann.freeBuildState(truePairs)
-    lastDedupChoice = Some(choice)
-    // record the outcome for same-session consumers ([[dedupStats]]),
-    // and seed the persisted chooser outcome (the kmeansIterCentroids /
-    // ensure* lifecycle applied to the measurement stage): this query
-    // IS the live measuring operator and always re-measures; only the
-    // cross-session report path ([[dedupStatsStored]]) reads the
-    // parquet store back. Ladder-width rows — tiny; written only when
-    // absent, atomically.
-    val choicePath = dedupChoicePath(d, eps, cellSize, pMax, floorNum,
-      floorDen, massPerRow, stride)
-    chooserMemo.put(choicePath, choice)
-    BuildStore.publish(choicePath)(choiceFrame(s, choice))
-    (probeJoinVerdicts(assign, eps, Some(choice.p)), assign)
+    // record the outcome for same-session consumers ([[dedupStats]]);
+    // this query IS the live measuring operator and always re-measures
+    chooserMemo.put(chooserKey(d, eps, cellSize, pMax, floorNum,
+      floorDen, massPerRow, stride), choice)
+    (probeJoinVerdicts(assign, eps, Some(choice.p)), assign, choice)
   }
 
   /** The dedup chooser's outcome as a queryable row per ladder width —
@@ -941,41 +855,23 @@ object Similarity {
     * dropped-vector count at the shipped width, all adjudicable by the
     * DuckDB oracle that restates the chooser's CTEs. */
   def dedupStats(s: SparkSession, d: String): DataFrame = {
-    // THE DECLARED GATE QUERY IS A PURE FUNCTION OF THE FIXTURE
-    // (r11 root-cause closure): round 11's one driver red was this
-    // query's hash, with rows/schema green and the failure
-    // unreproducible through either store lifecycle path — the
-    // structural defect was that the declared output depended on
-    // (fixture, /tmp history) while the oracle depends on (fixture)
-    // alone, and the un-versioned store key let any code revision's
-    // persisted rows be served unvalidated. So the declared query now
-    // NEVER reads cross-session storage: the chooser outcome comes
-    // from this session's own measurement — live, or the in-session
-    // memo a same-session [[semanticDedupMeasured]] already produced
-    // (deterministic ⇒ identical). Cross-session serving lives in
-    // [[dedupStatsStored]] (reports/bench tooling), code-keyed
-    // and invariant-validated.
-    val (c, dropped) = chooserMemo.get(dedupChoicePath(d)) match {
+    // The declared query is a pure function of the fixture: the
+    // chooser outcome comes from this call's own measurement, or from
+    // the memo a same-session [[semanticDedupMeasured]] at the same
+    // knobs already produced (deterministic ⇒ identical). Either way
+    // the dropped count is this call's own count of the SHIPPED verdict
+    // join at the chosen width, so no other query's outcome can reach
+    // these rows.
+    val (c, dropped) = chooserMemo.get(chooserKey(d)) match {
       case Some(choice) =>
-        lastDedupChoice = Some(choice)
-        (choice, droppedAtChosenWidth(s, d, choice))
+        val assign = semanticCellsProbe(s, d, DefaultCellSize, DefaultPMax)
+        (choice, try probeJoinVerdicts(assign, DefaultEps, Some(choice.p)).count()
+          finally Ann.freeBuildState(assign))
       case None =>
-        val (verdicts, assign) = semanticDedupMeasuredWithState(s, d)
-        val n = try verdicts.count() finally Ann.freeBuildState(assign)
-        (lastDedupChoice.getOrElse(throw new IllegalStateException(
-          "chooser did not record a DedupChoice")), n)
+        val (verdicts, assign, choice) = semanticDedupMeasuredWithState(s, d)
+        (choice, try verdicts.count() finally Ann.freeBuildState(assign))
     }
     statsFrame(s, c, dropped)
-  }
-
-  /** The live stage every stats path pays: the SHIPPED verdict join at
-    * the chosen width (pMax-wide assignment filtered to `choice.p` —
-    * identical to [[semanticDedupMeasured]]'s output plan), counted. */
-  private def droppedAtChosenWidth(s: SparkSession, d: String,
-      choice: DedupChoice): Long = {
-    val assign = semanticCellsProbe(s, d, DefaultCellSize, DefaultPMax)
-    try probeJoinVerdicts(assign, DefaultEps, Some(choice.p)).count()
-    finally Ann.freeBuildState(assign)
   }
 
   private def statsFrame(s: SparkSession, c: DedupChoice,
@@ -1016,75 +912,6 @@ object Similarity {
     }
     s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
       .orderBy(col("p"))
-  }
-
-  /** Served choices are validated against LIVE invariants before being
-    * trusted (VERDICT r11 fix 1a) — everything recomputable from the
-    * fixture and the stored curve itself without re-running the
-    * measurement: the ladder shape, the n-derived auto stride, the
-    * capture ≤ total bound, and the ENTIRE integer floor/ceiling walk
-    * (chosen width and floorMet re-derived from the stored
-    * captured/mass/truePairs and the live n). A row that fails any of
-    * these is a foreign or stale store entry, never servable. */
-  private[graft] def servedChoiceValid(c: DedupChoice, n: Long,
-      pMax: Int = DefaultPMax, floorNum: Long = DefaultFloorNum,
-      floorDen: Long = DefaultFloorDen,
-      massPerRow: Long = DefaultMassPerRow,
-      stride: Long = DefaultStride): Boolean = {
-    val ladder = Seq(1, 2, 4, 8).filter(_ <= pMax)
-    val strideEff = if (stride > 0L) stride else math.max(1L, n / 2048L)
-    def capOk(p: Int) = c.capturedAtP(p) * floorDen >= c.truePairs * floorNum
-    def massOk(p: Int) = c.massAtP(p) <= BigInt(n) * BigInt(massPerRow)
-    c.capturedAtP.keySet == ladder.toSet &&
-      c.massAtP.keySet == ladder.toSet &&
-      c.stride == strideEff &&
-      c.truePairs >= 0L &&
-      ladder.forall(p => c.capturedAtP(p) >= 0L &&
-        c.capturedAtP(p) <= c.truePairs &&
-        c.massAtP(p) >= 0 && c.massAtP(p) <= BigInt(n) * BigInt(n) * 8) && {
-        val affordable = ladder.filter(massOk)
-        val chosen = ladder.find(p => capOk(p) && massOk(p))
-          .orElse(affordable.lastOption).getOrElse(ladder.head)
-        c.p == chosen && c.floorMet == (capOk(chosen) && massOk(chosen))
-      }
-  }
-
-  /** The REPORT/BENCH entry point with the build-once/report-many
-    * lifecycle: serves the persisted chooser outcome when a valid one
-    * exists for this exact (fixture content, code revision, knobs)
-    * key, otherwise falls back to [[dedupStats]] (which measures live
-    * and seeds the store). An invalid store entry is deleted before
-    * the fallback so the re-measurement can re-seed. NOT the declared
-    * gate query — see [[dedupStats]] for why the gate never reads
-    * cross-session state. */
-  def dedupStatsStored(s: SparkSession, d: String): DataFrame = {
-    val choicePath = dedupChoicePath(d)
-    val served: Option[DedupChoice] =
-      if (BuildStore.published(choicePath)) {
-        // the read itself is part of validation: a published store
-        // with truncated/corrupt/empty parquet (disk fault, external
-        // tampering) must be DISCARDED and re-measured like any other
-        // invalid entry, not crash the report path
-        val readOrInvalid = scala.util.Try(readDedupChoice(s, choicePath))
-        val n = Tables.embeddings(s, d).count()
-        readOrInvalid match {
-          case scala.util.Success(c) if servedChoiceValid(c, n) => Some(c)
-          case other =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"dedup_stats_stored: persisted choice at $choicePath is " +
-                other.fold(e => s"unreadable (${e.getMessage})",
-                  c => s"invalid against live invariants (n=$n, stored=$c)") +
-                "; discarding and re-measuring")
-            BuildStore.deleteRecursively(new java.io.File(choicePath))
-            None
-        }
-      } else None
-    served match {
-      case Some(choice) =>
-        lastDedupChoice = Some(choice)
-        statsFrame(s, choice, droppedAtChosenWidth(s, d, choice))
-      case None => dedupStats(s, d)
-    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

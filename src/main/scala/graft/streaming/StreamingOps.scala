@@ -66,9 +66,7 @@ object StreamingOps {
     * per invocation, the build-state lifecycle posture. */
   private val liveSinks = scala.collection.concurrent.TrieMap.empty[String, String]
   private def freshSink(s: SparkSession, kind: String): String = {
-    liveSinks.remove(kind).foreach { prev =>
-      try s.catalog.dropTempView(prev) catch { case _: Throwable => () }
-    }
+    liveSinks.remove(kind).foreach(s.catalog.dropTempView)
     val name = kind + "_" + UUID.randomUUID().toString.replace("-", "")
     liveSinks.put(kind, name)
     name

@@ -5,7 +5,8 @@ import graft.LocalSession
 /** Prints [[graft.operators.Similarity.semanticDedupMeasured]]'s
   * chooser outcome — the measured capture curve, exact candidate
   * masses, the chosen probe width, and whether the floor was met —
-  * plus the verdict row count at the chosen width.
+  * plus the verdict row count at the chosen width. Always measures
+  * live, at the given knobs.
   *
   * Usage: runMain graft.tools.DedupChoiceReport
   *   [sfDir] [eps] [stride] [massPerRow] [cellSize]
@@ -25,24 +26,11 @@ object DedupChoiceReport {
     val massPerRow = args.lift(3).map(_.toLong).getOrElse(DefaultMassPerRow)
     val cellSize = args.lift(4).map(_.toInt).getOrElse(DefaultCellSize)
     val spark = LocalSession("graft-dedup-choice", LocalSession.cpus(32))
-    // at the declared-query defaults the REPORT path may serve the
-    // persisted (code-keyed, invariant-validated) outcome —
-    // build-once/report-many; any other knob set measures live.
-    // Compared against the NAMED constants, never re-hardcoded
-    // literals — a future default change must move this test with it
-    val defaults = eps == DefaultEps && stride == DefaultStride &&
-      massPerRow == DefaultMassPerRow && cellSize == DefaultCellSize
-    val rows =
-      if (defaults) {
-        val stats = graft.operators.Similarity.dedupStatsStored(spark, d)
-          .collect()
-        println(s"[dedup-choice] stats rows (stored-or-measured):")
-        stats.foreach(r => println(s"[dedup-choice]   $r"))
-        stats.head.getLong(7) // dropped
-      } else graft.operators.Similarity
-        .semanticDedupMeasured(spark, d, eps = eps, stride = stride,
-          massPerRow = massPerRow, cellSize = cellSize).count()
-    val c = graft.operators.Similarity.lastDedupChoice.get
+    val (verdicts, assign, c) = graft.operators.Similarity
+      .semanticDedupMeasuredWithState(spark, d, eps = eps, stride = stride,
+        massPerRow = massPerRow, cellSize = cellSize)
+    val rows = try verdicts.count()
+      finally graft.operators.Ann.freeBuildState(assign)
     println(s"[dedup-choice] d=$d eps=$eps stride=$stride " +
       s"massPerRow=$massPerRow cellSize=$cellSize chosen_p=${c.p} " +
       s"floor_met=${c.floorMet} true_pairs=${c.truePairs} " +

@@ -375,7 +375,7 @@ class AnnSpec extends AnyFunSuite {
     // number: production SemDeDup has the identical cluster-scoped
     // semantics, and the spread-fixture numbers (0.04 at sp30k) are
     // recorded in SCALING_SF10.md.
-    val r = graft.operators.Similarity.semanticPairRecall(spark, d)
+    val r = graft.operators.Similarity.semanticPairRecallProbe(spark, d, p = 1)
     info(f"semantic_dedup pair recall vs exact eps-join = $r%.4f")
     assert(math.abs(r - 2.0 / 7.0) < 1e-9,
       f"sf0.001 semantic pair recall moved from its pinned 2/7: $r%.6f")
@@ -428,9 +428,8 @@ class AnnSpec extends AnyFunSuite {
     // is 2/6/7/7 across the 1/2/4/8 ladder, so p = 4 is the smallest
     // width clearing the 9/10 floor; every width is affordable under
     // the default n·512 ceiling)
-    val (verdicts, assign) = Similarity.semanticDedupMeasuredWithState(spark, d)
+    val (verdicts, assign, c) = Similarity.semanticDedupMeasuredWithState(spark, d)
     val dropped = try verdicts.count() finally Ann.freeBuildState(assign)
-    val c = Similarity.lastDedupChoice.get
     assert(c.truePairs == 7L, s"true-pair count moved: ${c.truePairs}")
     assert(c.capturedAtP == Map(1 -> 2L, 2 -> 6L, 4 -> 7L, 8 -> 7L),
       s"capture curve moved: ${c.capturedAtP}")
@@ -453,18 +452,16 @@ class AnnSpec extends AnyFunSuite {
     // floor inside the ceiling, so the chooser must ship the widest
     // AFFORDABLE width with floorMet = false (the ANN chooser's
     // refusal contract, SCALING_SF10.md §6.5)
-    val (v1, a1) = Similarity.semanticDedupMeasuredWithState(spark, d,
+    val (v1, a1, c1) = Similarity.semanticDedupMeasuredWithState(spark, d,
       massPerRow = 64)
     try v1.count() finally Ann.freeBuildState(a1)
-    val c1 = Similarity.lastDedupChoice.get
     assert(c1.p == 1, s"refusal must ship the widest affordable width (1): ${c1.p}")
     assert(!c1.floorMet, "refusal path must report floorMet = false")
     // ceiling below every width (massPerRow = 1 → ceiling 500): nothing
     // is affordable; the chooser falls back to the ladder minimum
-    val (v2, a2) = Similarity.semanticDedupMeasuredWithState(spark, d,
+    val (v2, a2, c2) = Similarity.semanticDedupMeasuredWithState(spark, d,
       massPerRow = 1)
     try v2.count() finally Ann.freeBuildState(a2)
-    val c2 = Similarity.lastDedupChoice.get
     assert(c2.p == 1 && !c2.floorMet,
       s"nothing-affordable fallback moved: p=${c2.p} floorMet=${c2.floorMet}")
   }
@@ -474,152 +471,130 @@ class AnnSpec extends AnyFunSuite {
     // eps below any pair distance → empty sampled ground truth; the
     // chooser must not NPE on the empty capture aggregate (ADVICE r10)
     // and every width trivially clears the floor → cheapest width ships
-    val (v, a) = Similarity.semanticDedupMeasuredWithState(spark, d, eps = 1e-12)
+    val (v, a, c) = Similarity.semanticDedupMeasuredWithState(spark, d, eps = 1e-12)
     val n = try v.count() finally Ann.freeBuildState(a)
-    val c = Similarity.lastDedupChoice.get
     assert(c.truePairs == 0L && c.p == 1 && c.floorMet,
       s"total=0 contract moved: $c")
     assert(n == 0L, s"eps=1e-12 must drop nothing: $n")
   }
 
-  test("dedup chooser lifecycle: declared stats is session-pure, stored path validates + serves") {
+  test("dedup chooser lifecycle: declared stats is session-pure, memo-served and knob-keyed") {
     import graft.operators.Similarity
-    val path = Similarity.dedupChoicePath(d)
-    def rm(f: java.io.File): Unit = BuildStore.deleteRecursively(f)
-    rm(new java.io.File(path)) // hermetic: drop any earlier store
+    val key = Similarity.chooserKey(d)
     Similarity.clearChooserMemo()
-    // the store key carries the engine-code fingerprint and a CONTENT
+    // the memo key carries the engine-code fingerprint and a CONTENT
     // digest of the embeddings bytes — not just size+mtime
-    assert(path.contains(BuildStore.codeFingerprint),
-      s"store key lacks the engine-code fingerprint: $path")
-    assert(path.contains(BuildStore.contentDigest(d)),
-      s"store key lacks the embeddings content digest: $path")
+    assert(key.contains(BuildStore.codeFingerprint),
+      s"memo key lacks the engine-code fingerprint: $key")
+    assert(key.contains(BuildStore.contentDigest(d)),
+      s"memo key lacks the embeddings content digest: $key")
     val before = Similarity.chooserMeasurements
     val statsDf = Similarity.dedupStats(spark, d)
     // reader-stability pin: no declared output may carry a DECIMAL
     // column — duckdb .df() renders it float64 while pyarrow yields
     // Decimal objects, so a two-reader gate hash-mismatches on
-    // value-identical rows (the r11 driver red, root-caused r12).
-    // `mass` is the column that used to be DECIMAL(38,0).
+    // value-identical rows. `mass` is the column that used to be
+    // DECIMAL(38,0).
     assert(statsDf.schema.fields.forall(f =>
       !f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]),
       s"dedup_stats schema carries a decimal column: ${statsDf.schema}")
     assert(statsDf.schema("mass").dataType ==
       org.apache.spark.sql.types.LongType,
       "mass must report as BIGINT (reader-stable dtype)")
-    val s1 = statsDf.collect() // measures + seeds
+    val s1 = statsDf.collect()
     assert(Similarity.chooserMeasurements == before + 1,
       "first declared dedup_stats must run the live measurement exactly once")
-    assert(BuildStore.published(path),
-      "measured run did not seed the persisted chooser outcome")
-    // same session again: served from the IN-SESSION memo (pure — same
-    // code, same bytes), never from the cross-session parquet store
-    rm(new java.io.File(path))
+    // same session again: served from the in-session memo (pure — same
+    // code, same bytes)
     val s2 = Similarity.dedupStats(spark, d).collect()
     assert(Similarity.chooserMeasurements == before + 1,
       "same-session dedup_stats re-ran the measurement despite the memo")
     assert(s2.map(_.toString).toSeq == s1.map(_.toString).toSeq,
       s"memo-served rows diverged from measured rows:\n${s1.mkString("\n")}\nvs\n${s2.mkString("\n")}")
-    // the declared measuring query stays LIVE (kmeans_iter posture: it
-    // IS the measurement operator) and re-seeds the store it finds gone
-    val (v, a) = Similarity.semanticDedupMeasuredWithState(spark, d)
+    // the declared measuring query stays LIVE (it IS the measurement
+    // operator), memo or not
+    val (v, a, _) = Similarity.semanticDedupMeasuredWithState(spark, d)
     try v.count() finally Ann.freeBuildState(a)
     assert(Similarity.chooserMeasurements == before + 2,
       "semantic_dedup_measured must keep measuring live")
-    assert(BuildStore.published(path),
-      "live measured run did not re-seed the persisted outcome")
-    // a FRESH session (memo cleared) serving from storage: the REPORT
-    // entry point re-measures zero times and returns identical rows
+    // a fresh memo re-measures, to the same rows
     Similarity.clearChooserMemo()
-    val s3 = Similarity.dedupStatsStored(spark, d).collect()
-    assert(Similarity.chooserMeasurements == before + 2,
-      "store-hit dedupStatsStored re-ran the measurement")
-    assert(s3.map(_.toString).toSeq == s1.map(_.toString).toSeq,
-      s"store-served rows diverged from measured rows:\n${s1.mkString("\n")}\nvs\n${s3.mkString("\n")}")
-    // ... but the DECLARED query in that fresh session must NOT read
-    // the store: it re-measures (gate output = f(fixture) alone)
-    Similarity.clearChooserMemo()
-    val s4 = Similarity.dedupStats(spark, d).collect()
+    val s3 = Similarity.dedupStats(spark, d).collect()
     assert(Similarity.chooserMeasurements == before + 3,
-      "fresh-session declared dedup_stats served cross-session store state")
-    assert(s4.map(_.toString).toSeq == s1.map(_.toString).toSeq,
+      "fresh-memo dedup_stats did not re-measure")
+    assert(s3.map(_.toString).toSeq == s1.map(_.toString).toSeq,
       "re-measured declared rows diverged")
-    // a store entry that fails live-invariant validation (wrong stride
-    // ⇒ a foreign/stale code revision's rows) is refused, deleted, and
-    // re-measured — never served into output
-    val good = Similarity.lastDedupChoice.get
-    assert(Similarity.servedChoiceValid(good, dEmbeddingsN),
-      "freshly measured choice must validate against live invariants")
-    val forged = good.copy(stride = good.stride + 7)
-    assert(!Similarity.servedChoiceValid(forged, dEmbeddingsN),
-      "stride-inconsistent choice passed validation")
-    val forgedWalk = good.copy(p = if (good.p == 1) 2 else 1)
-    assert(!Similarity.servedChoiceValid(forgedWalk, dEmbeddingsN),
-      "floor-walk-inconsistent chosen width passed validation")
-    // knob isolation: a run at different knobs writes its OWN store
-    // location and can never be served for the defaults (the store key
-    // folds in every chooser parameter)
-    val otherPath = Similarity.dedupChoicePath(d, massPerRow = 64)
-    assert(otherPath != path, "store key ignores the mass ceiling knob")
-    val (v2, a2) = Similarity.semanticDedupMeasuredWithState(spark, d,
+    // knob isolation: a run at different knobs gets its OWN memo key
+    // and is never served for the defaults (the key folds in every
+    // chooser parameter)
+    assert(Similarity.chooserKey(d, massPerRow = 64) != key,
+      "memo key ignores the mass ceiling knob")
+    Similarity.clearChooserMemo()
+    val (v2, a2, cOther) = Similarity.semanticDedupMeasuredWithState(spark, d,
       massPerRow = 64)
     try v2.count() finally Ann.freeBuildState(a2)
-    val cOther = Similarity.lastDedupChoice.get
-    assert(BuildStore.published(otherPath),
-      "knob run did not seed its own store")
-    Similarity.clearChooserMemo()
     val after = Similarity.chooserMeasurements
-    val s5 = Similarity.dedupStatsStored(spark, d).collect() // defaults
-    assert(Similarity.chooserMeasurements == after,
-      "defaults dedupStatsStored re-measured despite its store")
-    assert(s5.map(_.toString).toSeq == s1.map(_.toString).toSeq,
-      s"defaults stats served the knob run's outcome (chosen p ${cOther.p})")
-    // a store whose parquet is UNREADABLE (truncated part file beside
-    // _SUCCESS — disk fault / external tampering) is discarded and
-    // re-measured like any invalid entry, never a crash of the report
-    Similarity.clearChooserMemo()
-    rm(new java.io.File(path))
-    new java.io.File(path).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_SUCCESS"), "")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "part-corrupt.snappy.parquet"),
-      "not parquet")
-    val beforeCorrupt = Similarity.chooserMeasurements
-    val s6 = Similarity.dedupStatsStored(spark, d).collect()
-    assert(Similarity.chooserMeasurements == beforeCorrupt + 1,
-      "corrupt store must be discarded and re-measured")
-    assert(s6.map(_.toString).toSeq == s1.map(_.toString).toSeq,
-      "re-measured rows after corrupt store diverged")
+    val s4 = Similarity.dedupStats(spark, d).collect() // defaults
+    assert(Similarity.chooserMeasurements == after + 1,
+      "defaults dedup_stats was served the knob run's memo entry")
+    assert(s4.map(_.toString).toSeq == s1.map(_.toString).toSeq,
+      s"defaults stats carry the knob run's outcome (chosen p ${cOther.p})")
   }
 
-  /** Live embeddings row count of fixture `d` — the n the serving-side
-    * invariant validation derives its expectations from. */
-  private lazy val dEmbeddingsN: Long =
-    graft.Tables.embeddings(spark, d).count()
-
-  test("chooser store publish is atomic: concurrent writers converge, stale partials are cleared") {
+  test("dedup_stats under a concurrent knob run returns the single-thread rows") {
     import graft.operators.Similarity
+    // the knob run (massPerRow = 64) ships p = 1 with the floor unmet;
+    // the defaults ship p = 4 with the floor met — so an outcome that
+    // leaked from one call into the other's rows would show
+    Similarity.clearChooserMemo()
+    val single = Similarity.dedupStats(spark, d).collect().map(_.toString).toSeq
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val knobRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val a = new Thread(() =>
+      try (1 to 3).foreach { _ =>
+        Similarity.clearChooserMemo()
+        results.add(Similarity.dedupStats(spark, d).collect().map(_.toString).toSeq)
+      } catch { case t: Throwable => errors.add(t) }
+      finally done.set(true))
+    // semanticDedupMeasured(massPerRow = 64) is `._1` of this call,
+    // which also hands back the assignment so each run frees it
+    val b = new Thread(() =>
+      try while (!done.get()) {
+        val (v, st, _) = Similarity.semanticDedupMeasuredWithState(spark, d,
+          massPerRow = 64)
+        try v.count() finally Ann.freeBuildState(st)
+        knobRuns.incrementAndGet()
+      } catch { case t: Throwable => errors.add(t); done.set(true) })
+    a.start(); b.start(); a.join(); b.join()
+    errors.forEach(t => fail("concurrent chooser run failed", t))
+    assert(results.size == 3, s"thread A finished ${results.size} of 3 runs")
+    info(s"knob runs interleaved with the three dedup_stats calls: ${knobRuns.get}")
+    results.forEach(r => assert(r == single,
+      s"dedup_stats rows under a concurrent knob run diverged:\n${single.mkString("\n")}\nvs\n${r.mkString("\n")}"))
+  }
+
+  test("BuildStore publish is atomic: concurrent writers converge, stale partials are cleared") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_publish").toFile
-    val path = new java.io.File(tmp, "choice").getPath
-    val choice = Similarity.DedupChoice(1, 1L, 3L,
-      Map(1 -> 3L, 2 -> 3L, 4 -> 3L, 8 -> 3L),
-      Map(1 -> BigInt(10), 2 -> BigInt(20), 4 -> BigInt(40),
-        8 -> BigInt(80)), floorMet = true)
+    val path = new java.io.File(tmp, "entry").getPath
+    def frame = spark.range(3).toDF("x")
+    def read(): Seq[Long] =
+      spark.read.parquet(path).collect().map(_.getLong(0)).toSeq.sorted
     try {
       // N concurrent writers of the same deterministic rows: exactly
       // one publish wins, the slot ends complete, every loser's tmp
-      // sibling is discarded (ADVICE r11: a reader must never observe
-      // an in-progress overwrite)
+      // sibling is discarded (a reader must never observe an
+      // in-progress overwrite)
       val threads = (1 to 4).map(_ => new Thread(() =>
-        BuildStore.publish(path)(Similarity.choiceFrame(spark, choice))))
+        BuildStore.publish(path)(frame)))
       threads.foreach(_.start()); threads.foreach(_.join())
       assert(BuildStore.published(path),
         "no complete store after concurrent publishes")
-      assert(Similarity.readDedupChoice(spark, path) == choice,
+      assert(read() == Seq(0L, 1L, 2L),
         "published rows corrupted under concurrency")
       val leftovers = tmp.listFiles()
-        .filter(_.getName.startsWith("choice.tmp"))
+        .filter(_.getName.startsWith("entry.tmp"))
       assert(leftovers.isEmpty,
         s"loser tmp dirs not cleaned: ${leftovers.mkString(",")}")
       // a stale partial (dir without _SUCCESS — a writer died
@@ -630,15 +605,15 @@ class AnnSpec extends AnyFunSuite {
       assert(partial.mkdirs())
       val junk = new java.io.File(partial, "part-junk")
       java.nio.file.Files.writeString(junk.toPath, "stale")
-      BuildStore.publish(path)(Similarity.choiceFrame(spark, choice))
+      BuildStore.publish(path)(frame)
       assert(BuildStore.published(path),
         "stale successor-less partial permanently blocked seeding")
-      assert(Similarity.readDedupChoice(spark, path) == choice,
+      assert(read() == Seq(0L, 1L, 2L),
         "publish over a stale partial lost the rows")
     } finally BuildStore.deleteRecursively(tmp)
   }
 
-  test("chooser store key is content-sensitive: same size+mtime, different bytes miss the store") {
+  test("chooser memo key and index store key are content-sensitive: same size+mtime, different bytes miss") {
     // closes the size+mtime collision channel: a fixture regenerated in
     // place with identical file metadata but different bytes must land
     // on a different chooser key AND a different index key
@@ -651,7 +626,7 @@ class AnnSpec extends AnyFunSuite {
     // byte flip below must not depend on running as root
     assert(dst.setWritable(true), "could not make the copy writable")
     try {
-      val key1 = Similarity.dedupChoicePath(tmp.getPath)
+      val key1 = Similarity.chooserKey(tmp.getPath)
       val index1 = BuildStore.key(tmp.getPath, "full-approx", "m16")
       val mtime = dst.lastModified()
       val raf = new java.io.RandomAccessFile(dst, "rw")
@@ -662,7 +637,7 @@ class AnnSpec extends AnyFunSuite {
         raf.write(b ^ 0xff)
       } finally raf.close()
       assert(dst.setLastModified(mtime), "could not restore mtime")
-      val key2 = Similarity.dedupChoicePath(tmp.getPath)
+      val key2 = Similarity.chooserKey(tmp.getPath)
       assert(key1 != key2,
         "chooser key collided across different bytes at identical size+mtime")
       val index2 = BuildStore.key(tmp.getPath, "full-approx", "m16")
